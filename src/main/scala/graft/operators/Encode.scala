@@ -17,34 +17,45 @@ import org.apache.spark.sql.functions._
   * Everything here is pure `Column` algebra — no UDFs — so predicates stay
   * inside whole-stage codegen and Catalyst can prune/push down around them.
   * At 100 TB this layer is a narrow map over the scan: no shuffle, no state.
+  * The one per-record cost that matters is the JSON sniff (a full
+  * `try_parse_json` of the payload), so each field is sniffed exactly once:
+  * [[withFormatTags]] computes the tag in its own projection and
+  * [[sniffedOut]] derives the payload from the tag, not from a second parse.
   */
 object Encode {
 
-  /** True when the (string-cast) bytes parse as JSON.
+  /** The `key_format`/`value_format` tag: "json" | "base64" | null(omitted).
     * `try_parse_json` (Spark 4 Variant) matches the reference's serde_json
     * sniff (`s3.rs:215-235`): any valid JSON document, including scalars.
+    * Empty input → null (the reference omits the field entirely; null is
+    * our columnar representation of "omitted").
     */
-  def isJson(c: Column): Column = try_parse_json(c.cast("string")).isNotNull
-
-  /** The sniffed payload: original text when valid JSON, else base64 of the
-    * raw bytes — `s3.rs:220-234`. Empty input → null (reference omits the
-    * field entirely; null is our columnar representation of "omitted").
-    */
-  def jsonOrBase64(c: Column): Column = {
+  private def formatTag(c: Column): Column = {
     val s = c.cast("string")
-    // Spark's base64 is MIME-chunked (CRLF every 76 chars); the reference
-    // emits standard unchunked base64 (`s3.rs:227`), so strip the breaks.
     when(length(s) === 0 || c.isNull, lit(null).cast("string"))
-      .when(isJson(c), s)
-      .otherwise(replace(base64(c.cast("binary")), lit("\r\n"), lit("")))
+      .when(try_parse_json(s).isNotNull, lit("json"))
+      .otherwise(lit("base64"))
   }
 
-  /** The `key_format`/`value_format` tag: "json" | "base64" | null(omitted). */
-  def formatTag(c: Column): Column = {
-    val s = c.cast("string")
-    when(length(s) === 0 || c.isNull, lit(null).cast("string"))
-      .when(isJson(c), lit("json"))
-      .otherwise(lit("base64"))
+  /** Adds `<f>_format` for each payload field `f`: the one JSON sniff per
+    * field. The tags live in their own projection and [[sniffedOut]] reads
+    * each tag twice, so CollapseProject cannot inline the sniff back into
+    * its readers (it only inlines an expensive expression read once).
+    */
+  def withFormatTags(records: DataFrame, fields: String*): DataFrame =
+    records.select(col("*") +: fields.map(f => formatTag(col(f)).as(s"${f}_format")): _*)
+
+  /** `<f>_out` from the tag [[withFormatTags]] added — `s3.rs:220-234`: the
+    * original text when the tag is "json", base64 of the raw bytes when
+    * "base64", null when omitted.
+    */
+  def sniffedOut(f: String): Column = {
+    val (c, tag) = (col(f), col(s"${f}_format"))
+    // Spark's base64 is MIME-chunked (CRLF every 76 chars); the reference
+    // emits standard unchunked base64 (`s3.rs:227`), so strip the breaks.
+    when(tag === "json", c.cast("string"))
+      .when(tag === "base64", replace(base64(c.cast("binary")), lit("\r\n"), lit("")))
+      .as(s"${f}_out")
   }
 
   /** F2: records → the JSON-lines projection as typed columns.
@@ -54,14 +65,20 @@ object Encode {
     * correctness oracle compare structured values instead of JSON text.
     */
   def jsonLinesProjection(records: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
-    records.select(Seq(
+    withFormatTags(records, "key", "value").select(Seq(
       col("topic"), col("partition"), col("offset"), col("timestamp"),
-      jsonOrBase64(col("key")).as("key_out"),
-      formatTag(col("key")).as("key_format"),
-      jsonOrBase64(col("value")).as("value_out"),
-      formatTag(col("value")).as("value_format"),
+      sniffedOut("key"), col("key_format"),
+      sniffedOut("value"), col("value_format"),
       col("headers")
     ) ++ passthrough.map(col): _*)
+
+  /** [[jsonLinesProjection]] carrying every non-record column through — the
+    * partitioner's derivation columns a sink partitions the write by.
+    */
+  def jsonLinesWithDerived(records: DataFrame): DataFrame = {
+    val recordCols = graft.model.KafkaRecord.schema.fieldNames.toSet
+    jsonLinesProjection(records, records.columns.filterNot(recordCols).toIndexedSeq)
+  }
 
   /** The literal one-JSON-object-per-record line (`s3.rs:283-284`).
     * `to_json` drops null struct fields, reproducing the reference's

@@ -52,14 +52,11 @@ object PipelineQueries {
     // F2: JSON-lines encoder — JSON sniff with base64 fallback + format tags.
     "f2_json_encode" -> ((
       (s: SparkSession, dir: String) => {
-        val r = records(s, dir)
-        r.select(
+        Encode.withFormatTags(records(s, dir), "key", "value").select(
           col("topic"), col("partition").cast("long").as("partition"),
           col("offset"), col("ts_ms"),
-          Encode.jsonOrBase64(col("key")).as("key_out"),
-          Encode.formatTag(col("key")).as("key_format"),
-          Encode.jsonOrBase64(col("value")).as("value_out"),
-          Encode.formatTag(col("value")).as("value_format"))
+          Encode.sniffedOut("key"), col("key_format"),
+          Encode.sniffedOut("value"), col("value_format"))
       },
       Some(s"""$recordsCte
         |SELECT topic, partition, "offset", ts_ms,
@@ -81,10 +78,8 @@ object PipelineQueries {
       (s: SparkSession, dir: String) => {
         val docs = Sources.table(s, dir, "documents")
           .select(col("doc_id"), col("text").cast("binary").as("value"))
-        docs.select(
-          col("doc_id"),
-          Encode.jsonOrBase64(col("value")).as("value_out"),
-          Encode.formatTag(col("value")).as("value_format"))
+        Encode.withFormatTags(docs, "value").select(
+          col("doc_id"), Encode.sniffedOut("value"), col("value_format"))
       },
       Some("""SELECT doc_id,
         |  CASE WHEN length(text)=0 THEN NULL

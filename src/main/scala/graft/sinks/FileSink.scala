@@ -73,11 +73,8 @@ object FileSink {
         AvroSink.writeAvroObjects(derived, path)
       case fmt =>
         val projected = fmt match {
-          case Format.Json =>
-            // F2 JSON-lines projection, partition-derivation columns carried through
-            val recordCols = Set("topic", "partition", "offset", "timestamp", "key", "value", "headers")
-            Encode.jsonLinesProjection(derived,
-              derived.columns.filterNot(recordCols).toIndexedSeq)
+          // F2 JSON-lines projection, partition-derivation columns carried through
+          case Format.Json => Encode.jsonLinesWithDerived(derived)
           case _ => derived
         }
         val distributed =

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
@@ -24,27 +25,44 @@ import graft.model.KafkaRecord
   * in-process push path (`service.rs:102-335`, its Python smoke test) made
   * a first-class Spark source; the production-scale path remains
   * produce-to-Kafka → S1 (SURVEY §2.1 S6), which shares this exact schema.
+  *
+  * Each queue is an append-only array under its own lock: `push` costs
+  * O(batch) amortized, `size` O(1) and `slice` O(slice), so no call pays
+  * for the queue's length.
   */
 object PushBuffers {
-  private val buffers =
-    new ConcurrentHashMap[String, java.util.concurrent.CopyOnWriteArrayList[KafkaRecord]]()
+  private final class Queue {
+    private var records = new Array[KafkaRecord](1024)
+    private var n = 0
 
-  private def buf(name: String) =
-    buffers.computeIfAbsent(name, _ => new java.util.concurrent.CopyOnWriteArrayList[KafkaRecord]())
+    def append(batch: Seq[KafkaRecord]): Long = synchronized {
+      if (n + batch.size > records.length)
+        records = java.util.Arrays.copyOf(records,
+          math.max(records.length * 2, n + batch.size))
+      batch.copyToArray(records, n)
+      n += batch.size
+      n.toLong
+    }
+    def size: Long = synchronized(n.toLong)
+    def slice(from: Long, until: Long): Seq[KafkaRecord] = synchronized {
+      val hi = math.max(0L, math.min(until, n.toLong))
+      val lo = math.min(math.max(from, 0L), hi)
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        java.util.Arrays.copyOfRange(records, lo.toInt, hi.toInt))
+    }
+  }
+
+  private val buffers = new ConcurrentHashMap[String, Queue]()
+
+  private def buf(name: String) = buffers.computeIfAbsent(name, _ => new Queue)
 
   /** Append a batch; returns the queue's new end offset. */
-  def push(name: String, records: Seq[KafkaRecord]): Long = {
-    val b = buf(name)
-    b.addAll(records.asJava)
-    b.size().toLong
-  }
+  def push(name: String, records: Seq[KafkaRecord]): Long = buf(name).append(records)
 
-  def size(name: String): Long = buf(name).size().toLong
+  def size(name: String): Long = buf(name).size
 
-  def slice(name: String, from: Long, until: Long): Seq[KafkaRecord] = {
-    val b = buf(name)
-    (from until math.min(until, b.size().toLong)).map(i => b.get(i.toInt))
-  }
+  def slice(name: String, from: Long, until: Long): Seq[KafkaRecord] =
+    buf(name).slice(from, until)
 
   def clear(name: String): Unit = buffers.remove(name)
 }
@@ -117,7 +135,7 @@ final class PushScan(queue: String, lo: Long = Long.MinValue, hi: Long = Long.Ma
     new PushMicroBatchStream(queue, required)
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
-      val ranges = PushMicroBatchStream.partitionRanges(queue, 0L, PushBuffers.size(queue))
+      val ranges = PushMicroBatchStream.chunkRanges(queue, 0L, PushBuffers.size(queue))
       if (lo == Long.MinValue && hi == Long.MaxValue) ranges
       else ranges.filter { p =>
         // zone map: a chunk survives only if its offset range intersects
@@ -138,12 +156,32 @@ final case class PushOffset(pos: Long) extends Offset {
 }
 
 object PushMicroBatchStream {
-  /** Split [from, until) into ≤1000-record partitions so a large backlog
-    * drains with task parallelism instead of one fat task.
+  /** Smallest read task: a backlog is never cut finer than this. */
+  private val MinTaskRecords = 1000L
+
+  /** Split the n records of [from, until) into `min(parallelism,
+    * max(1, n / 1000))` contiguous, near-equal ranges (none when n = 0): a
+    * backlog drains in one wave of core-sized tasks, and only a batch of
+    * under 1000 records gets a task that small. Each read task writes one
+    * file per output group, so the task count, not the record count, sets
+    * the files a micro-batch commits.
     */
-  def partitionRanges(queue: String, from: Long, until: Long): Array[InputPartition] =
-    (from until until by 1000L)
-      .map(s => PushInputPartition(queue, s, math.min(s + 1000L, until)): InputPartition)
+  def partitionRanges(queue: String, from: Long, until: Long,
+                      parallelism: Int): Array[InputPartition] = {
+    val n = math.max(until - from, 0L)
+    val parts =
+      if (n == 0) 0 else math.max(1L, math.min(parallelism.toLong, n / MinTaskRecords)).toInt
+    (0 until parts).map { i =>
+      PushInputPartition(queue, from + n * i / parts, from + n * (i + 1) / parts): InputPartition
+    }.toArray
+  }
+
+  /** Fixed 1000-record chunks for the batch read: each chunk is one zone
+    * map (offset min/max) the pushed `offset` bounds can skip.
+    */
+  def chunkRanges(queue: String, from: Long, until: Long): Array[InputPartition] =
+    (from until until by MinTaskRecords)
+      .map(s => PushInputPartition(queue, s, math.min(s + MinTaskRecords, until)): InputPartition)
       .toArray
 }
 
@@ -155,7 +193,8 @@ final class PushMicroBatchStream(queue: String,
   override def deserializeOffset(json: String): Offset = PushOffset(json.toLong)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     PushMicroBatchStream.partitionRanges(queue,
-      start.asInstanceOf[PushOffset].pos, end.asInstanceOf[PushOffset].pos)
+      start.asInstanceOf[PushOffset].pos, end.asInstanceOf[PushOffset].pos,
+      SparkSession.active.sparkContext.defaultParallelism)
   override def createReaderFactory(): PartitionReaderFactory =
     new PushReaderFactory(required = required)
   // the committed prefix stays in the buffer: offsets are absolute queue

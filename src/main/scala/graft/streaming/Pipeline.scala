@@ -87,10 +87,7 @@ object Pipeline {
     val partCols = graft.operators.OutputPartitioners.partitionByColumns(sink)
     val derived = graft.operators.OutputPartitioners.applyPartitioner(records, sink)
     val projected = sink.format match {
-      case graft.model.Format.Json =>
-        val recordCols = Set("topic", "partition", "offset", "timestamp", "key", "value", "headers")
-        graft.operators.Encode.jsonLinesProjection(derived,
-          derived.columns.filterNot(recordCols).toIndexedSeq)
+      case graft.model.Format.Json => graft.operators.Encode.jsonLinesWithDerived(derived)
       case _ => derived
     }
     projected.writeStream

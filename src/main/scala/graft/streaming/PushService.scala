@@ -34,6 +34,12 @@ final class PushService(spark: SparkSession) {
   final case class RecordId(topic: String, partition: Int, offset: Long)
 
   private val input = MemoryStream[KafkaRecord](spark)
+  // MemoryStream encodes rows with one shared serializer outside its own
+  // lock, so concurrent addData calls (one per gRPC stream) corrupt rows.
+  // Pushes serialize on this lock, not on the service's monitor: `flush`
+  // holds that one through processAllAvailable, and a push must never
+  // wait behind a flush.
+  private val inputLock = new Object
   private val pendingAcks = new ConcurrentLinkedQueue[(Seq[RecordId], Long)]()
   @volatile private var acked: Vector[RecordId] = Vector.empty
   // high-water mark of ids already reported by a flush: each FlushResponse
@@ -48,7 +54,7 @@ final class PushService(spark: SparkSession) {
   /** Push one batch; returns the record ids that will be acked on commit. */
   def push(batch: Seq[KafkaRecord]): Seq[RecordId] = {
     val ids = batch.map(r => RecordId(r.topic, r.partition, r.offset))
-    input.addData(batch)
+    inputLock.synchronized(input.addData(batch))
     ids
   }
 

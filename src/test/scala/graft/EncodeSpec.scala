@@ -76,6 +76,32 @@ class EncodeSpec extends SparkSpec {
     assert(back.toSeq == Seq((10L, """{"id": 1}"""), (11L, "raw  bytes")))
   }
 
+  test("F2: the executed plan parses each payload once (key and value: two parseJson calls)") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // a range scan, not a local Seq: the optimizer would fold a projection
+    // over a LocalRelation before planning and leave nothing to count
+    val records = spark.range(64).select(
+      lit("t").as("topic"), (col("id") % 8).cast("int").as("partition"), col("id").as("offset"),
+      current_timestamp().as("timestamp"), col("id").cast("string").cast("binary").as("key"),
+      when(col("id") % 3 === 0, lit("not json")).otherwise(to_json(struct(col("id"))))
+        .cast("binary").as("value"),
+      map(lit("h"), lit("v")).as("headers"))
+    val df = Encode.jsonLinesProjection(records)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val parses = plan.collect { case node =>
+      node.expressions.flatMap(_.collect {
+        case s: StaticInvoke if s.functionName == "parseJson" => s
+      })
+    }.flatten
+    assert(parses.size == 2, s"expected one sniff per field, got ${parses.size}:\n$plan")
+    val formats = df.select("value_format").as[String].collect()
+    assert(formats.count(_ == "base64") == 22 && formats.count(_ == "json") == 42)
+  }
+
   test("P2: default partitioner golden key prefix/test-topic/0_1234567890.json (s3.rs:836)") {
     val key = Seq(rec()).toDF()
       .select(OutputPartitioners.defaultKey("prefix", "json").as("k"))

@@ -77,6 +77,50 @@ class ServiceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("concurrent pushes from 4 threads reach the sink intact (pushes serialize)") {
+    val svc = new PushService(spark)
+    val root = Files.createTempDirectory("graft-svc-conc").toString
+    val ckpt = Files.createTempDirectory("graft-svc-conc-ckpt").toString
+    val cfg = SinkConfig(bucketName = "b", format = Format.Parquet)
+    val q = svc.records.writeStream
+      .queryName("graft-svc-concurrent")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.sinks.FileSink.writeBatch(batch, cfg, root): Unit
+      }.start()
+    val (threads, batches, batchSize) = (4, 40, 100)
+    def recAt(t: Int, b: Int, i: Int) = {
+      val offset = (t.toLong * batches + b) * batchSize + i
+      KafkaRecord("push-topic", t, offset, new java.sql.Timestamp(1700000000000L + offset),
+        s"k$offset".getBytes("UTF-8"), ("""{"v":"""" + ("x" * (i % 40)) + s"""-$offset"}""")
+          .getBytes("UTF-8"), Map("content-type" -> "application/json"))
+    }
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val workers = (0 until threads).map { t =>
+        val th = new Thread(() =>
+          try {
+            start.await()
+            (0 until batches).foreach(b => svc.push((0 until batchSize).map(recAt(t, b, _))))
+          } catch { case e: Throwable => failures.add(e) })
+        th.start(); th
+      }
+      start.countDown()
+      workers.foreach(_.join(60000))
+      assert(failures.isEmpty, failures.asScala.mkString("; "))
+      q.processAllAvailable()
+      val expected = (for (t <- 0 until threads; b <- 0 until batches; i <- 0 until batchSize)
+        yield { val r = recAt(t, b, i); (r.partition, r.offset, new String(r.value, "UTF-8")) }).sorted
+      val back = spark.read.parquet(root).select("partition", "offset", "value").collect()
+        .map(r => (r.getInt(0), r.getLong(1), new String(r.getAs[Array[Byte]](2), "UTF-8")))
+        .toSeq.sorted
+      assert(back.size == expected.size, s"read back ${back.size} of ${expected.size}")
+      assert(back == expected)
+    } finally q.stop()
+  }
+
   test("config and status verbs over a live engine") {
     val root = Files.createTempDirectory("graft-svc2").toString
     val engine = Engine.fromConfigJson(spark,

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -948,6 +950,124 @@ class StreamingSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 1,
       s"zone maps should prune 2 of 3 chunks, got ${df.rdd.getNumPartitions}")
     assert(df.count() == 500)
+  }
+
+  test("micro-batch planning: one contiguous range per core, none under 1000 records") {
+    import graft.sources.{PushInputPartition, PushMicroBatchStream}
+    val p = 4
+    def ranges(from: Long, until: Long) =
+      PushMicroBatchStream.partitionRanges("plan_q", from, until, p)
+        .map { case r: PushInputPartition => (r.from, r.until) }.toSeq
+    def check(from: Long, until: Long, expectedCount: Int): Unit = {
+      val rs = ranges(from, until)
+      assert(rs.size == expectedCount, s"[$from, $until): $rs")
+      if (rs.nonEmpty) {
+        assert(rs.head._1 == from && rs.last._2 == until, s"must cover [$from, $until): $rs")
+        assert(rs.zip(rs.tail).forall { case (a, b) => a._2 == b._1 }, s"gap or overlap: $rs")
+        val sizes = rs.map { case (a, b) => b - a }
+        assert(sizes.max - sizes.min <= 1, s"near-equal sizes: $sizes")
+        if (until - from >= 1000) assert(sizes.min >= 1000, s"task under 1000 records: $sizes")
+      }
+    }
+    check(0, 0, 0)
+    check(17, 17, 0)
+    check(5, 5 + 999, 1)
+    check(0, 1000L * p, p)
+    check(3000, 3000 + 1000L * p, p)
+    check(0, 2500, 2) // never three 833-record tasks
+    check(0, 40000, p) // a 40k backlog drains in one wave of p tasks
+    check(123, 123 + 40001, p)
+  }
+
+  test("PushBuffers: concurrent pushes land whole, once each, at increasing ends") {
+    import graft.sources.PushBuffers
+    val q = "push_concurrent_q"
+    PushBuffers.clear(q)
+    val (threads, batches, batchSize) = (4, 200, 50)
+    val ends = Array.fill(threads)(scala.collection.mutable.ArrayBuffer[Long]())
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val workers = (0 until threads).map { t =>
+      val th = new Thread(() => {
+        start.await()
+        (0 until batches).foreach { b =>
+          val base = (t.toLong * batches + b) * batchSize
+          ends(t) += PushBuffers.push(q, (0 until batchSize).map(i => rec(base + i, s"$t-$b-$i")))
+        }
+      })
+      th.start(); th
+    }
+    start.countDown()
+    workers.foreach(_.join(60000))
+    val total = threads.toLong * batches * batchSize
+    assert(PushBuffers.size(q) == total)
+    val all = PushBuffers.slice(q, 0, total)
+    assert(all.map(_.offset).sorted == (0L until total), "every record at exactly one position")
+    ends.zipWithIndex.foreach { case (es, t) =>
+      assert(es.size == batches && es.zip(es.tail).forall { case (a, b) => a < b },
+        s"thread $t's end offsets must strictly increase")
+      // each push's returned end closes that thread's batch, appended whole
+      es.zipWithIndex.foreach { case (end, b) =>
+        val base = (t.toLong * batches + b) * batchSize
+        assert(PushBuffers.slice(q, end - batchSize, end).map(_.offset) == (base until base + batchSize))
+      }
+    }
+    PushBuffers.clear(q)
+  }
+
+  test("a 40k push backlog drains through the JSON sink in one wave of core-sized tasks") {
+    import graft.sources.PushBuffers
+    import graft.streaming.Engine
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val q = "drain_40k_q"
+    PushBuffers.clear(q)
+    val dataRoot = Files.createTempDirectory("graft-drain-40k").toString
+    val ckpt = Files.createTempDirectory("graft-drain-40k-ckpt").toString
+    val n = 40000
+    PushBuffers.push(q, (0 until n).map(i => KafkaRecord("t", i % 8, i.toLong,
+      new Timestamp(1234567890000L), s"k$i".getBytes, s"""{"i":$i}""".getBytes, Map.empty)))
+    val engine = Engine.fromConfigJson(spark, s"""{
+      "kafka": {"bootstrap_servers": ["unused:9092"]},
+      "connectors": [
+        {"name": "drain-src", "connector_class": "graft.PushSourceConnector",
+         "connector_type": "source", "tasks_max": 1, "topics": ["t"],
+         "config": {"queue": "$q"}},
+        {"name": "drain-sink", "connector_class": "graft.FileSinkConnector",
+         "connector_type": "sink", "tasks_max": 1, "topics": ["t"],
+         "config": {"s3.bucket.name": "b", "format.class": "json",
+           "partitioner.class": "default", "flush.size": "100"}}
+      ]}""", dataRoot, ckpt)
+    // read tasks = the tasks of the query's source stages (no parent stage)
+    val readTasks = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => e.stageInfos.filter(_.parentIds.isEmpty)
+            .foreach(si => readTasks.merge(id, si.numTasks, (a: Int, b: Int) => a + b)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    engine.start()
+    try {
+      val query = spark.streams.active.find(_.name == "drain-src").get
+      query.processAllAvailable()
+      val batches = query.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.map(_.numInputRows).toSeq == Seq(n.toLong), "one micro-batch drains the backlog")
+      val p = spark.sparkContext.defaultParallelism
+      import org.scalatest.concurrent.Eventually.{eventually, timeout}
+      import org.scalatest.time.{Seconds, Span}
+      eventually(timeout(Span(10, Seconds))) {
+        assert(readTasks.getOrDefault(query.id.toString, 0) > 0)
+      }
+      val tasks = readTasks.get(query.id.toString)
+      assert(tasks <= p, s"$tasks read tasks for $n records on $p cores")
+      val files = Files.walk(java.nio.file.Paths.get(s"$dataRoot/drain-src")).iterator()
+        .asScala.filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".json")).size
+      assert(files > 0 && files <= p * 8, s"$files data files for $n records on $p cores")
+      assert(graft.sources.Sources.jsonLinesRecords(spark, s"$dataRoot/drain-src").count() == n)
+    } finally {
+      engine.stop()
+      spark.sparkContext.removeSparkListener(listener)
+      PushBuffers.clear(q)
+    }
   }
 
   test("streaming incremental dedup filters each micro-batch against the static corpus") {
