@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -40,13 +40,11 @@ final class PushService(spark: SparkSession) {
   // holds that one through processAllAvailable, and a push must never
   // wait behind a flush.
   private val inputLock = new Object
-  private val pendingAcks = new ConcurrentLinkedQueue[(Seq[RecordId], Long)]()
-  @volatile private var acked: Vector[RecordId] = Vector.empty
-  // high-water mark of ids already reported by a flush: each FlushResponse
-  // acks only what committed SINCE the previous flush, so a long-lived
-  // stream's ack payloads don't grow without bound (and clients never see
-  // an id re-acked)
-  @volatile private var reported: Int = 0
+  // ids committed since the last flush: ackOnCommit appends, flush takes the
+  // whole delta in one swap. Each FlushResponse acks only what committed
+  // SINCE the previous flush, no id is acked twice, and the service holds
+  // no id once it has been reported.
+  private val unreported = new AtomicReference(Vector.empty[RecordId])
 
   /** The DataFrame of pushed records, to be wired into any sink pipeline. */
   def records = input.toDF()
@@ -64,17 +62,17 @@ final class PushService(spark: SparkSession) {
     */
   def flush(query: StreamingQuery): Seq[RecordId] = synchronized {
     query.processAllAvailable()
-    val snapshot = acked
-    val delta = snapshot.drop(reported)
-    reported = snapshot.size
-    delta
+    unreported.getAndSet(Vector.empty)
   }
 
   /** Wire a sink query over [[records]]; acks accumulate per committed
     * micro-batch via foreachBatch's post-commit position.
     */
-  def ackOnCommit(ids: Iterator[RecordId]): Unit =
-    acked = acked ++ ids
+  def ackOnCommit(ids: Iterator[RecordId]): Unit = {
+    val batch = ids.toVector
+    unreported.updateAndGet(_ ++ batch): Unit
+  }
 
-  def ackedIds: Seq[RecordId] = acked
+  /** Committed ids no flush has reported yet. */
+  def unreportedCount: Int = unreported.get.size
 }

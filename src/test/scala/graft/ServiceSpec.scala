@@ -87,7 +87,9 @@ class ServiceSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.sinks.FileSink.writeBatch(batch, cfg, root): Unit
+        graft.sinks.FileSink.writeBatch(batch, cfg, root)
+        svc.ackOnCommit(batch.select("topic", "partition", "offset").collect().iterator
+          .map(r => svc.RecordId(r.getString(0), r.getInt(1), r.getLong(2))))
       }.start()
     val (threads, batches, batchSize) = (4, 40, 100)
     def recAt(t: Int, b: Int, i: Int) = {
@@ -110,7 +112,11 @@ class ServiceSpec extends SparkSpec {
       start.countDown()
       workers.foreach(_.join(60000))
       assert(failures.isEmpty, failures.asScala.mkString("; "))
-      q.processAllAvailable()
+      val acked = svc.flush(q)
+      assert(acked.size == threads * batches * batchSize, "every pushed id acked")
+      assert(acked.map(_.offset).sorted == (0L until threads.toLong * batches * batchSize),
+        "each id acked exactly once")
+      assert(svc.flush(q).isEmpty && svc.unreportedCount == 0)
       val expected = (for (t <- 0 until threads; b <- 0 until batches; i <- 0 until batchSize)
         yield { val r = recAt(t, b, i); (r.partition, r.offset, new String(r.value, "UTF-8")) }).sorted
       val back = spark.read.parquet(root).select("partition", "offset", "value").collect()
@@ -118,6 +124,32 @@ class ServiceSpec extends SparkSpec {
         .toSeq.sorted
       assert(back.size == expected.size, s"read back ${back.size} of ${expected.size}")
       assert(back == expected)
+    } finally q.stop()
+  }
+
+  test("flush hands each committed id over once and the service keeps none after it") {
+    val svc = new PushService(spark)
+    val root = Files.createTempDirectory("graft-svc-acks").toString
+    val ckpt = Files.createTempDirectory("graft-svc-acks-ckpt").toString
+    val cfg = SinkConfig(bucketName = "b", format = Format.Parquet)
+    val q = svc.records.writeStream
+      .queryName("graft-svc-acks")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.sinks.FileSink.writeBatch(batch, cfg, root)
+        svc.ackOnCommit(batch.select("topic", "partition", "offset").collect().iterator
+          .map(r => svc.RecordId(r.getString(0), r.getInt(1), r.getLong(2))))
+      }.start()
+    try {
+      val (cycles, batchSize) = (5, 20)
+      (0 until cycles).foreach { k =>
+        val offsets = (k * batchSize until (k + 1) * batchSize).map(_.toLong)
+        svc.push(offsets.map(o => rec(o, s"v$o")))
+        assert(svc.flush(q).map(_.offset).sorted == offsets, s"cycle $k acks its own ids")
+        assert(svc.unreportedCount == 0, s"cycle $k: reported ids are released")
+      }
+      assert(svc.flush(q).isEmpty, "nothing is re-acked")
     } finally q.stop()
   }
 

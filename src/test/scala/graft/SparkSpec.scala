@@ -13,6 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
+      // the daemon's `file:` filesystem, so every suite exercises it
+      .config(GraftSession.localFsConf.toMap)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -1644,4 +1644,46 @@ class StreamingSpec extends SparkSpec {
       assert(offsets == Seq(0L, 1L, 2L, 3L), s"got $offsets")
     } finally q2.stop()
   }
+
+  test("a checkpoint written on Hadoop's stock local FS resumes exactly-once on graft's") {
+    import java.net.URI
+    import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem, LocalFileSystem, RawLocalFileSystem}
+    import graft.sources.{PushBuffers, PushDataSource}
+    val queue = "stock_fs_upgrade_q"
+    PushBuffers.clear(queue)
+    val root = Files.createTempDirectory("graft-fs-upgrade").toString
+    val ckpt = Files.createTempDirectory("graft-fs-upgrade-ckpt").toString
+    val cfg = SinkConfig(bucketName = "b", format = Format.Parquet,
+      partitioner = PartitionerKind.Time)
+    // the daemon before the switch: Hadoop's own classes on both APIs (the
+    // FileSystem uncached, so the session's conf picks the class)
+    val stock = spark.newSession()
+    Seq("fs.file.impl" -> classOf[LocalFileSystem].getName,
+      "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs",
+      "fs.file.impl.disable.cache" -> "true").foreach { case (k, v) => stock.conf.set(k, v) }
+    val stockConf = stock.sessionState.newHadoopConf()
+    val stockFs = FileSystem.get(new URI(ckpt), stockConf)
+    try assert(stockFs.getClass == classOf[LocalFileSystem] &&
+      stockFs.asInstanceOf[LocalFileSystem].getRawFileSystem.getClass == classOf[RawLocalFileSystem])
+    finally stockFs.close()
+    assert(AbstractFileSystem.get(new URI("file:///"), stockConf).getClass.getName ==
+      "org.apache.hadoop.fs.local.LocalFs")
+    def startQuery(session: org.apache.spark.sql.SparkSession) =
+      Pipeline.streamToFilesExactlyOnce(
+        session.readStream.format(classOf[PushDataSource].getName).option("queue", queue).load(),
+        cfg, root, ckpt, Trigger.ProcessingTime(0), name = "graft_fs_upgrade")
+    val q1 = startQuery(stock)
+    PushBuffers.push(queue, Seq(rec(0, "a"), rec(1, "b")))
+    q1.processAllAvailable()
+    q1.stop()
+    PushBuffers.push(queue, Seq(rec(2, "c"))) // pushed during the upgrade
+    val q2 = startQuery(spark)
+    try {
+      PushBuffers.push(queue, Seq(rec(3, "d")))
+      q2.processAllAvailable()
+      val offsets = spark.read.parquet(root).select("offset")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(offsets == Seq(0L, 1L, 2L, 3L), s"got $offsets")
+    } finally q2.stop()
+  }
 }
