@@ -32,7 +32,12 @@ object GraftSession {
     * a `file:` `FileSystem` that code in this JVM opened before the session
     * keeps the stock class (`FileContext` is uncached and always takes the
     * override). Clearing that cache is process-global state a library must
-    * not touch, so it is left alone.
+    * not touch, so it is left alone. The other direction holds too: once a
+    * graft session opens `file:`, every later `FileSystem.get(file:)` in the
+    * JVM, from any SparkSession or plain Hadoop code, shares the cached
+    * [[graft.sinks.NioLocalFileSystem]]. That is acceptable only because it
+    * behaves as stock does, down to the permission bits (setuid, setgid and
+    * sticky included); `LocalFsSpec` holds it to that.
     */
   val localFsConf: Seq[(String, String)] = Seq(
     "spark.hadoop.fs.file.impl" -> classOf[sinks.NioLocalFileSystem].getName,

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.net.URI
-import java.nio.file.{Files, attribute}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults,
@@ -14,19 +14,23 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Without the native `libhadoop`, `RawLocalFileSystem` runs a child process
   * for two calls the streaming checkpoint and the sink commit make on every
   * micro-batch: `chmod` in `setPermission` (on every `create` and `mkdirs`)
-  * and `readlink` in `getFileLinkStatus`. Here `setPermission` goes through
-  * `java.nio.file`, and `getFileLinkStatus` skips the `readlink` unless the
-  * path is a symlink. Bytes on disk, `.crc` side files, permission bits and
-  * rename semantics are Hadoop's own.
+  * and `readlink` in `getFileLinkStatus`. Here `setPermission` writes the
+  * mode through `java.nio.file`'s `unix` view, and `getFileLinkStatus` skips
+  * the `readlink` unless the path is a symlink. Bytes on disk, `.crc` side
+  * files, permission bits and rename semantics are Hadoop's own.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
-  override def setPermission(p: Path, permission: FsPermission): Unit =
-    // NIO has no sticky bit
-    if (permission.getStickyBit) super.setPermission(p, permission)
-    else Files.setPosixFilePermissions(pathToFile(p).toPath,
-      attribute.PosixFilePermissions.fromString(permission.getUserAction.SYMBOL
-        + permission.getGroupAction.SYMBOL + permission.getOtherAction.SYMBOL))
+  // One chmod(2) with the full mode, sticky bit included. Stock runs
+  // `chmod 0755`-style 4-digit modes, and GNU chmod keeps a directory's
+  // setuid/setgid bits (octal 06000) under those, so a directory keeps them
+  // here too; a file loses them, as under stock.
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val path = pathToFile(p).toPath
+    val cur = Files.getAttribute(path, "unix:mode").asInstanceOf[Int]
+    val keep = if ((cur & 0xF000) == 0x4000) cur & 0xC00 else 0 // S_IFDIR
+    Files.setAttribute(path, "unix:mode", Int.box(permission.toShort | keep))
+  }
 
   // stock returns getFileStatus(f) whenever readlink finds no link target
   override def getFileLinkStatus(f: Path): FileStatus =

@@ -2,7 +2,6 @@ package graft
 
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
-import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 import java.util.EnumSet
 
@@ -39,13 +38,18 @@ class LocalFsSpec extends SparkSpec {
     c
   }
 
-  private def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
+  private def octal(s: String) = Integer.parseInt(s, 8)
+  private def perm(s: String) = new FsPermission(octal(s).toShort)
 
-  /** Relative path → mode string of every file and directory under `root`. */
+  /** Full permission bits (setuid, setgid and sticky included) of `p`. */
+  private def mode(p: JPath): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & octal("7777")
+  private def setMode(p: JPath, m: Int): Unit = Files.setAttribute(p, "unix:mode", Int.box(m))
+
+  /** Relative path → octal mode of every file and directory under `root`. */
   private def modes(root: JPath): Map[String, String] =
     Files.walk(root).iterator.asScala.filter(_ != root).map(p =>
-      root.relativize(p).toString -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
-      .toMap
+      root.relativize(p).toString -> Integer.toOctalString(mode(p))).toMap
 
   /** Creates, mkdirs and chmods through both Hadoop APIs under `root`. */
   private def exercise(conf: Configuration, root: JPath): Unit = {
@@ -62,6 +66,13 @@ class LocalFsSpec extends SparkSpec {
       fs.setPermission(p("fs/file604"), perm("604"))
       fs.mkdirs(p("fs/sticky"))
       fs.setPermission(p("fs/sticky"), perm("1777"))
+      // a 4-digit chmod keeps a directory's setuid/setgid bits, clears a file's
+      fs.mkdirs(p("fs/setid-dir"))
+      setMode(root.resolve("fs/setid-dir"), octal("6755"))
+      fs.setPermission(p("fs/setid-dir"), perm("750"))
+      fs.create(p("fs/setid-file")).close()
+      setMode(root.resolve("fs/setid-file"), octal("6755"))
+      fs.setPermission(p("fs/setid-file"), perm("640"))
       fc.mkdir(p("fc/dir"), FsPermission.getDirDefault, true)
       fc.mkdir(p("fc/dir750"), perm("750"), true)
       fc.create(p("fc/dir/file"), create).close()
@@ -72,15 +83,22 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("files and directories get stock Hadoop's permission bits under the same umask") {
-    for (umask <- Seq("022", "077")) {
-      val stockRoot = Files.createTempDirectory("graft-fs-stock")
-      val nioRoot = Files.createTempDirectory("graft-fs-nio")
+    for (umask <- Seq("022", "077"); setgidRoot <- Seq(false, true)) {
+      val roots @ Seq(stockRoot, nioRoot) =
+        Seq("graft-fs-stock", "graft-fs-nio").map(Files.createTempDirectory(_))
+      // a group-shared root: directories made below inherit setgid
+      if (setgidRoot) roots.foreach(r => setMode(r, mode(r) | octal("2000")))
       exercise(hadoopConf(stock = true, umask), stockRoot)
       exercise(hadoopConf(stock = false, umask), nioRoot)
       val (stock, nio) = (modes(stockRoot), modes(nioRoot))
+      val clue = s"umask $umask, setgid root $setgidRoot"
       assert(stock.keys.exists(_.endsWith(".crc")), stock)
-      assert(nio == stock, s"umask $umask")
-      assert(Files.getPosixFilePermissions(nioRoot.resolve("fs/sticky")).size == 9)
+      assert(nio == stock, clue)
+      val setgid = if (setgidRoot) octal("2000") else 0
+      assert(mode(nioRoot.resolve("fs/sticky")) == (octal("1777") | setgid), clue)
+      assert(mode(nioRoot.resolve("fc/dir")) == (octal("777") & ~octal(umask) | setgid), clue)
+      assert(mode(nioRoot.resolve("fs/setid-dir")) == octal("6750"), clue)
+      assert(mode(nioRoot.resolve("fs/setid-file")) == octal("640"), clue)
     }
   }
 
