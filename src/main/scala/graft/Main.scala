@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Engine
+import graft.streaming.{Engine, InProcessConnectorService}
 
 /** The executable daemon — the reference's `main()` boot path
   * (`src/main.rs:51-180`) on Spark: argv config path (default
@@ -16,12 +16,12 @@ import graft.streaming.Engine
   * clients (`test_grpc_sink.py`, tonic) point here unchanged. The unix
   * socket ALSO serves gRPC ([[graft.streaming.GrpcUdsControlServer]], via
   * the netty epoll native transport the distribution ships; non-epoll
-  * platforms fall back to JSON lines there), with the JSON-lines
-  * local-CLI surface beside it at `<path>.jsonl`
-  * ([[graft.streaming.UnixControlServer]]), and an optional
-  * `json_tcp_address` keeps the `nc`-able JSON-lines TCP front
-  * ([[graft.streaming.ControlServer]]). Every front dispatches the same
-  * transport-agnostic [[graft.streaming.ConnectorService]] verbs.
+  * platforms serve JSON lines on the socket path instead). The JSON-lines
+  * front, [[graft.streaming.ControlServer]], serves the local CLI at
+  * `<path>.jsonl` and, when `json_tcp_address` is set, the `nc`-able TCP
+  * twin. Every front dispatches the same transport-agnostic
+  * [[graft.streaming.ConnectorService]] verbs. The daemon wires no push
+  * sink: the gRPC SinkStream answers Push with an error and Flush fails.
   *
   * Run: `sbt "runMain graft.Main [config.json [dataRoot [checkpointRoot]]]"`.
   * With the shipped `config/connect.json`, drop text files into the
@@ -29,6 +29,12 @@ import graft.streaming.Engine
   * records move end-to-end with no broker.
   */
 object Main {
+  /** The service every control front serves. No query reads a push buffer
+    * in the daemon, so no push sink is wired: SinkStream Push answers Err.
+    */
+  private[graft] def controlService(engine: Engine): InProcessConnectorService =
+    new InProcessConnectorService(engine, pushSink = None)
+
   def main(args: Array[String]): Unit = {
     val configPath = args.headOption.getOrElse("config/connect.json")
     val dataRoot = args.lift(1).getOrElse("/tmp/graft/data")
@@ -38,25 +44,8 @@ object Main {
     val spark = GraftSession.getOrCreate()
     val engine = Engine.fromConfigFile(spark, configPath, dataRoot, checkpointRoot)
 
-    // control plane: JSON-lines over TCP on the configured address, bound
-    // to the same ConnectorService verbs the gRPC front would serve (the
-    // proto transport needs ScalaPB codegen unavailable offline).
-    // SECURITY: the protocol is unauthenticated and update_config can
-    // re-point ingestion, so the bind host comes from tcp_address and
-    // should stay loopback (the shipped config's default); a wildcard bind
-    // is honored but called out loudly as an operator decision.
     val token = engine.config.flatMap(_.authToken)
-    lazy val svc = new graft.streaming.InProcessConnectorService(engine,
-      new graft.streaming.PushService(spark),
-      () => throw new IllegalStateException("daemon mode has no push sink"))
-
-    def hostPort(a: String): (String, Int) = {
-      val host = a.split(":").dropRight(1).mkString(":") match {
-        case "" => "127.0.0.1"
-        case h => h
-      }
-      (host, a.split(":").last.toInt)
-    }
+    val svc = controlService(engine)
 
     // primary wire, reference parity: gRPC on tcp_address. The proto has
     // no authentication (same as the reference), so a non-loopback bind is
@@ -70,8 +59,7 @@ object Main {
       host == "localhost" ||
         (try java.net.InetAddress.getByName(host).isLoopbackAddress
          catch { case _: java.net.UnknownHostException => false })
-    val grpcControl = engine.config.flatMap(_.tcpAddress).map { a =>
-      val (host, port) = hostPort(a)
+    val grpcControl = engine.config.flatMap(_.tcpBind).map { case (host, port) =>
       if (!isLoopback(host) && token.isDefined)
         throw new IllegalArgumentException(
           s"refusing to bind the gRPC control plane on non-loopback $host: " +
@@ -89,16 +77,17 @@ object Main {
       srv
     }
 
-    val control = engine.config.flatMap(_.jsonTcpAddress).map { a =>
-      val (host, port) = hostPort(a)
+    def jsonLines(address: java.net.SocketAddress) = {
+      val srv = new graft.streaming.ControlServer(svc, address, token)
+      println(s"[graft] control plane listening on ${srv.start()} (JSON lines)")
+      srv
+    }
+    val control = engine.config.flatMap(_.jsonTcpBind).map { case (host, port) =>
       if ((host == "0.0.0.0" || host == "::") && token.isEmpty)
         println("[graft] WARNING: control plane binding ALL interfaces with no " +
           "authentication — any network peer can reconfigure this daemon; " +
           "use 127.0.0.1, set auth_token, or front it with an authenticating proxy")
-      val srv = new graft.streaming.ControlServer(svc, port, host, token)
-      val bound = srv.start()
-      println(s"[graft] control plane listening on $host:$bound (JSON lines)")
-      srv
+      jsonLines(new java.net.InetSocketAddress(host, port))
     }
 
     // second listener, reference parity (`main.rs:128-157`): gRPC on the
@@ -115,12 +104,7 @@ object Main {
         srv
       }
     val udsControl = engine.config.flatMap(_.unixSocketPath).map { p =>
-      val jsonPath = if (grpcUds.isDefined) s"$p.jsonl" else p
-      val srv = new graft.streaming.UnixControlServer(
-        svc, java.nio.file.Paths.get(jsonPath), token)
-      srv.start()
-      println(s"[graft] control plane listening on unix:$jsonPath (JSON lines)")
-      srv
+      jsonLines(java.net.UnixDomainSocketAddress.of(if (grpcUds.isDefined) s"$p.jsonl" else p))
     }
 
     engine.start()

@@ -38,7 +38,15 @@ final case class GraftConfig(
       */
     authToken: Option[String],
     kafka: KafkaClusterConfig,
-    connectors: Seq[ConnectorConfig])
+    connectors: Seq[ConnectorConfig]) {
+
+  /** `tcp_address` as (host, port); [[ConfigLoader.parse]] validated it. */
+  def tcpBind: Option[(String, Int)] =
+    tcpAddress.map(ConfigLoader.hostPort("tcp_address", _))
+  /** `json_tcp_address` as (host, port); [[ConfigLoader.parse]] validated it. */
+  def jsonTcpBind: Option[(String, Int)] =
+    jsonTcpAddress.map(ConfigLoader.hostPort("json_tcp_address", _))
+}
 
 object ConfigLoader {
   private val mapper = new ObjectMapper()
@@ -73,13 +81,29 @@ object ConfigLoader {
           config = strMap(c.get("config")))
       }
 
-    GraftConfig(
+    val cfg = GraftConfig(
       tcpAddress = opt(root.get("tcp_address")),
       unixSocketPath = opt(root.get("unix_socket_path")),
       jsonTcpAddress = opt(root.get("json_tcp_address")),
       authToken = opt(root.get("auth_token")),
       kafka = kafka,
       connectors = connectors)
+    // a malformed bind fails here, at boot, naming its key
+    cfg.tcpBind; cfg.jsonTcpBind
+    cfg
+  }
+
+  /** `host:port` → (host, port); an empty host (`":50051"`) is loopback.
+    * Anything else — no port, a non-numeric or out-of-range one — is
+    * rejected with a message naming the config `key`.
+    */
+  def hostPort(key: String, address: String): (String, Int) = {
+    val i = address.lastIndexOf(':')
+    val port = if (i < 0) None
+      else address.substring(i + 1).toIntOption.filter(p => p >= 0 && p <= 65535)
+    require(port.isDefined, s"$key: '$address' is not host:port (e.g. 127.0.0.1:50051)")
+    val host = address.substring(0, i)
+    (if (host.isEmpty) "127.0.0.1" else host, port.get)
   }
 
   def load(path: String): GraftConfig =

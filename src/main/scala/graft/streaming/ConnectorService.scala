@@ -120,24 +120,33 @@ trait ConnectorService {
   * produces no ack; Flush drains the query and then acks exactly the record
   * ids the committed micro-batches durably wrote, followed by the
   * FlushResponse. Heartbeats echo the client timestamp.
+  *
+  * With no [[InProcessConnectorService.PushSink]] wired (the daemon's
+  * assembly: no query reads a push buffer there), every Push is answered
+  * with an Err and buffers nothing, and every Flush fails.
   */
-final class InProcessConnectorService(engine: Engine, push: PushService,
-                                      sinkQuery: () => StreamingQuery,
+final class InProcessConnectorService(engine: Engine,
+                                      pushSink: Option[InProcessConnectorService.PushSink],
                                       sourceTap: Option[SourceTap] = None)
     extends ConnectorService {
   import Wire._
+
+  /** The wired push sink; without one, Push and Flush fail. */
+  private def sink: InProcessConnectorService.PushSink =
+    pushSink.getOrElse(throw new IllegalStateException(
+      "no push sink is wired: SinkStream is not served here"))
 
   override def sinkStream(requests: Iterator[SinkRequest]): Iterator[SinkResponse] =
     requests.flatMap {
       case SinkRequest.Beat(hb) => Iterator(SinkResponse.Beat(hb))
       case SinkRequest.Push(batch) =>
-        try { push.push(batch.records); Iterator.empty }
+        try { sink.push.push(batch.records); Iterator.empty }
         catch { case e: Exception =>
           Iterator(SinkResponse.Err(ConnectorError(e.getMessage, "PUSH_FAILED")))
         }
       case SinkRequest.Flush(req) =>
         try {
-          val committed = push.flush(sinkQuery())
+          val committed = sink.push.flush(sink.query())
             .map(id => RecordId(id.topic, id.partition, id.offset))
           Iterator(
             SinkResponse.Ack(RecordAck(committed, success = true)),
@@ -229,10 +238,15 @@ final class InProcessConnectorService(engine: Engine, push: PushService,
 }
 
 object InProcessConnectorService {
+  /** The push data plane: the buffer SinkStream pushes into, and the query
+    * that drains it into a sink (Flush waits on it, then acks).
+    */
+  final case class PushSink(push: PushService, query: () => StreamingQuery)
+
   /** Convenience assembly used by tests and embedders: engine from config
     * JSON + a push data plane whose sink query the caller supplies.
     */
   def apply(engine: Engine, push: PushService,
             sinkQuery: () => StreamingQuery): InProcessConnectorService =
-    new InProcessConnectorService(engine, push, sinkQuery)
+    new InProcessConnectorService(engine, Some(PushSink(push, sinkQuery)))
 }

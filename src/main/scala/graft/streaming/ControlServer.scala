@@ -1,8 +1,10 @@
 package graft.streaming
 
-import java.net.{ServerSocket, Socket}
+import java.net.{SocketAddress, StandardProtocolFamily, UnixDomainSocketAddress}
+import java.nio.channels.{Channels, ServerSocketChannel, SocketChannel}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.Executors
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ExecutorService, Executors, RejectedExecutionException, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -21,67 +23,122 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *     "tasks_max":1,"config":{...}}}
   * }}}
   *
+  * One server for both transports the reference daemon listens on
+  * (`src/main.rs:101-157`): an `InetSocketAddress` serves TCP
+  * (`json_tcp_address`), a `UnixDomainSocketAddress` serves the local CLI
+  * socket (`unix_socket_path`, or `<path>.jsonl` beside the gRPC one).
+  * Drive it with `nc 127.0.0.1 50052` or `nc -U /path/to.sock`. On a unix
+  * address, reachability is filesystem permissions on the socket path; on
+  * TCP it is the network, so bind loopback unless the operator decides
+  * otherwise — update_config lets any peer that reaches the socket
+  * re-point what the daemon ingests and writes.
+  *
   * Streaming verbs (sink/source streams) live on the gRPC wire — a
   * line-oriented transport is the wrong shape for them.
   */
-final class ControlServer(service: ConnectorService, port: Int,
-                          host: String = "127.0.0.1",
+final class ControlServer(service: ConnectorService, address: SocketAddress,
                           authToken: Option[String] = None) {
 
   private val protocol = new ControlProtocol(service, authToken)
-  @volatile private var server: ServerSocket = null
-  private val pool = Executors.newCachedThreadPool(r => {
-    val t = new Thread(r, "graft-control"); t.setDaemon(true); t
-  })
+  private val socketPath: Option[Path] = address match {
+    case u: UnixDomainSocketAddress => Some(u.getPath)
+    case _ => None
+  }
+  private var server: ServerSocketChannel = null
+  private var pool: ExecutorService = null
 
-  /** Bind and serve; returns the actual port (use 0 to pick a free one).
-    *
-    * Binds the given host — loopback unless explicitly configured otherwise:
-    * the protocol has no authentication, and update_config lets any peer
-    * that can reach the socket re-point what data the daemon ingests and
-    * writes. A non-loopback bind is an explicit operator decision (put a
-    * network boundary or an authenticating proxy in front), never a default.
+  /** Bind and serve; returns the bound address (TCP port 0 picks a free
+    * one). On a unix address a leftover socket file from a crashed run is
+    * reclaimed first, but only if no live daemon answers on it
+    * ([[ControlServer.reclaimStaleSocket]]).
     */
-  def start(): Int = synchronized {
+  def start(): SocketAddress = synchronized {
     require(server == null, "already started")
-    server = new ServerSocket(port, 50, java.net.InetAddress.getByName(host))
-    pool.submit(new Runnable {
-      override def run(): Unit = {
-        while (server != null && !server.isClosed)
-          try {
-            val sock = server.accept()
-            pool.submit(new Runnable { override def run(): Unit = handle(sock) })
-          } catch { case _: Exception => () } // closed during accept
-      }
+    socketPath.foreach { p =>
+      if (p.getParent != null) Files.createDirectories(p.getParent)
+      ControlServer.reclaimStaleSocket(p)
+    }
+    val srv =
+      if (socketPath.isDefined) ServerSocketChannel.open(StandardProtocolFamily.UNIX)
+      else ServerSocketChannel.open()
+    srv.bind(address, 50)
+    val handlers = Executors.newCachedThreadPool(r => {
+      val t = new Thread(r, "graft-control"); t.setDaemon(true); t
     })
-    server.getLocalPort
+    handlers.execute(() =>
+      while (srv.isOpen)
+        try {
+          val ch = srv.accept()
+          try handlers.execute(() => handle(ch))
+          catch { case _: RejectedExecutionException => ch.close() } // stopping
+        } catch { case _: Exception => () } // closed during accept
+    )
+    server = srv
+    pool = handlers
+    srv.getLocalAddress
   }
 
+  /** Close the listener AND every live connection: the handlers are
+    * interrupted, which closes their channels, so no verb runs on this
+    * server once `stop` returns.
+    */
   def stop(): Unit = synchronized {
-    if (server != null) { server.close(); server = null }
+    if (server != null) {
+      server.close(); server = null
+      pool.shutdownNow()
+      // bounded wait for a handler that is still inside a verb
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+      pool = null
+      socketPath.foreach(Files.deleteIfExists)
+    }
   }
 
-  private def handle(sock: Socket): Unit =
+  private def handle(ch: SocketChannel): Unit =
     try {
       val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+        new java.io.InputStreamReader(Channels.newInputStream(ch), UTF_8))
       val out = new java.io.PrintWriter(
-        new java.io.OutputStreamWriter(sock.getOutputStream, UTF_8), true)
+        new java.io.OutputStreamWriter(Channels.newOutputStream(ch), UTF_8), true)
       var line = in.readLine()
       while (line != null) {
-        if (line.trim.nonEmpty) out.println(dispatch(line))
+        if (line.trim.nonEmpty) out.println(protocol.dispatch(line))
         line = in.readLine()
       }
     } catch { case _: Exception => () }
-    finally sock.close()
-
-  private[graft] def dispatch(line: String): String = protocol.dispatch(line)
+    finally ch.close()
 }
 
-/** The verb dispatch shared by every control transport (TCP
-  * [[ControlServer]], UDS [[UnixControlServer]], and a future gRPC front):
-  * one JSON request per line in, one JSON response per line out, with the
-  * optional shared-secret gate applied before any verb runs.
+object ControlServer {
+  /** Reclaim a leftover socket file ONLY when it is provably stale: probe
+    * it with a connect attempt and delete on connection-refused (the
+    * crashed-daemon leftover). If something ANSWERS, another daemon owns
+    * the path — fail loudly instead of silently hijacking its control
+    * socket (the second instance would otherwise steal the CLI surface of
+    * a live daemon). Both unix-socket fronts (JSON lines here, gRPC in
+    * [[GrpcUdsControlServer]]) share this guard.
+    */
+  def reclaimStaleSocket(socketPath: Path): Unit = {
+    if (Files.exists(socketPath)) {
+      val live =
+        try {
+          val probe = SocketChannel.open(StandardProtocolFamily.UNIX)
+          try probe.connect(UnixDomainSocketAddress.of(socketPath))
+          finally probe.close()
+          true
+        } catch { case _: java.io.IOException => false }
+      if (live)
+        throw new IllegalStateException(
+          s"socket $socketPath is in use by a live daemon; refusing to hijack it")
+      Files.deleteIfExists(socketPath)
+    }
+  }
+}
+
+/** The verb dispatch shared by the JSON-lines transports ([[ControlServer]]
+  * over TCP and unix sockets): one JSON request per line in, one JSON
+  * response per line out, with the optional shared-secret gate applied
+  * before any verb runs. The gRPC fronts map the same verbs in
+  * [[GrpcWire]].
   */
 private[graft] final class ControlProtocol(service: ConnectorService,
                                            authToken: Option[String]) {

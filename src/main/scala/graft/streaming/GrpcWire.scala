@@ -594,8 +594,8 @@ final class GrpcControlServer(service: ConnectorService, port: Int,
   * distribution ships it for this platform
   * (`netty-transport-native-epoll-*-linux-x86_64.jar` on the same
   * unmanaged classpath). Callers must gate on [[GrpcUdsControlServer
-  * .available]] — non-epoll platforms fall back to the JSON-lines UDS
-  * front.
+  * .available]] — non-epoll platforms serve JSON lines on the socket
+  * path instead ([[ControlServer]] on a unix address).
   */
 final class GrpcUdsControlServer(service: ConnectorService,
                                  socketPath: java.nio.file.Path) {
@@ -611,7 +611,7 @@ final class GrpcUdsControlServer(service: ConnectorService,
       java.nio.file.Files.createDirectories(socketPath.getParent)
     // stale-socket recovery with a liveness probe: refuses to hijack a
     // socket a live daemon still answers on (see reclaimStaleSocket)
-    UnixControlServer.reclaimStaleSocket(socketPath)
+    ControlServer.reclaimStaleSocket(socketPath)
     boss = new EpollEventLoopGroup(1)
     worker = new EpollEventLoopGroup()
     server = NettyServerBuilder

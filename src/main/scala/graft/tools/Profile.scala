@@ -9,8 +9,8 @@ import graft.SparkEntry
 
 /** Per-entry optimization probe: `runMain graft.tools.Profile name [name…]`
   * runs each catalog entry against `SPARK_GRAFT_SF_DIR` with the bench's
-  * exact methodology (cache clear, noop sink — `QueryProbe`'s `count()`
-  * lets Catalyst prune the expensive projections, guide §1.4) and prints
+  * exact methodology (cache clear, noop sink — timing a `count()` would
+  * let Catalyst prune the expensive projections, guide §1.4) and prints
   *
   *  - wall seconds for two runs (JVM-warm second run ≈ the bench's min),
   *  - a per-job breakdown (job count is the scheduler-overhead signal for

@@ -122,6 +122,18 @@ class ConfigSpec extends AnyFunSuite {
       SinkConfig.fromMap(base + ("rotate.interval.ms" -> "-5")))
   }
 
+  test("a control address without a valid port fails at parse, naming its key") {
+    for ((key, bad) <- Seq("tcp_address" -> "127.0.0.1", "tcp_address" -> "host:http",
+                           "json_tcp_address" -> "127.0.0.1:70000")) {
+      val json = shipped.replace("\"tcp_address\": \"0.0.0.0:50051\"", s""""$key": "$bad"""")
+      val ex = intercept[IllegalArgumentException](ConfigLoader.parse(json))
+      assert(ex.getMessage.contains(key) && ex.getMessage.contains(bad), ex.getMessage)
+    }
+    // an empty host is loopback, as before
+    val cfg = ConfigLoader.parse(shipped.replace("0.0.0.0:50051", ":50051"))
+    assert(cfg.tcpBind.contains(("127.0.0.1", 50051)))
+  }
+
   test("rejects unknown connector_type") {
     val bad = shipped.replace("\"connector_type\": \"source\"", "\"connector_type\": \"transform\"")
     assertThrows[IllegalArgumentException](ConfigLoader.parse(bad))

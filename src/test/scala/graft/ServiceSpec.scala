@@ -36,6 +36,25 @@ class ServiceSpec extends SparkSpec {
        |  ]
        |}""".stripMargin
 
+  /** The two address families the JSON-lines control server binds. */
+  private def controlAddresses(dir: java.nio.file.Path): Seq[java.net.SocketAddress] = Seq(
+    new java.net.InetSocketAddress("127.0.0.1", 0),
+    java.net.UnixDomainSocketAddress.of(dir.resolve("control.sock")))
+
+  /** One JSON-lines connection to `address`, TCP or unix. */
+  private final class LineClient(address: java.net.SocketAddress) {
+    import java.nio.charset.StandardCharsets.UTF_8
+    private val ch = java.nio.channels.SocketChannel.open(address)
+    private val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+      java.nio.channels.Channels.newOutputStream(ch), UTF_8), true)
+    private val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      java.nio.channels.Channels.newInputStream(ch), UTF_8))
+
+    /** Send one request line; the reply line, or null at end of stream. */
+    def ask(line: String): String = { out.println(line); in.readLine() }
+    def close(): Unit = ch.close()
+  }
+
   test("sink stream: heartbeat echoes, push is unacked, flush acks committed ids") {
     val svc = new PushService(spark)
     val root = Files.createTempDirectory("graft-svc").toString
@@ -236,8 +255,8 @@ class ServiceSpec extends SparkSpec {
     val engine = Engine.fromConfigJson(spark,
       engineConfig("io.rustconnect.KafkaSourceConnector"), root, s"$root/ckpt")
     val tap = new SourceTap(capacity = 2, drainMax = 1)
-    val service = new InProcessConnectorService(engine, new PushService(spark),
-      () => fail("unused"), sourceTap = Some(tap))
+    val service = new InProcessConnectorService(engine, pushSink = None,
+      sourceTap = Some(tap))
 
     assert(tap.offer(Seq(rec(0, "a"))))
     assert(tap.offer(Seq(rec(1, "b"))))
@@ -277,8 +296,8 @@ class ServiceSpec extends SparkSpec {
     val engine = Engine.fromConfigJson(spark,
       engineConfig("io.rustconnect.KafkaSourceConnector"), root, s"$root/ckpt")
     val tap = new SourceTap()
-    val service = new InProcessConnectorService(engine, new PushService(spark),
-      () => fail("unused"), sourceTap = Some(tap))
+    val service = new InProcessConnectorService(engine, pushSink = None,
+      sourceTap = Some(tap))
     val srv = new GrpcControlServer(service, port = 0)
     val port = srv.start()
     val ch = GrpcControlClient.channel("127.0.0.1", port)
@@ -348,8 +367,8 @@ class ServiceSpec extends SparkSpec {
     // drainMax=1: each heartbeat delivers one batch, so batch 1 can be
     // acked+committed while batch 2 is polled-but-unacked at the drop
     val tap = new SourceTap(drainMax = 1)
-    val service = new InProcessConnectorService(engine, new PushService(spark),
-      () => fail("unused"), sourceTap = Some(tap))
+    val service = new InProcessConnectorService(engine, pushSink = None,
+      sourceTap = Some(tap))
     val srv = new GrpcControlServer(service, port = 0)
     val port = srv.start()
     val ch = GrpcControlClient.channel("127.0.0.1", port)
@@ -448,8 +467,9 @@ class ServiceSpec extends SparkSpec {
       engineConfig("io.rustconnect.KafkaSourceConnector"), root, s"$root/ckpt")
     val service = InProcessConnectorService(engine, new PushService(spark),
       () => fail("unused"))
-    val srv = new graft.streaming.ControlServer(service, port = 0)
-    val port = srv.start()
+    val srv = new graft.streaming.ControlServer(service,
+      new java.net.InetSocketAddress("127.0.0.1", 0))
+    val port = srv.start().asInstanceOf[java.net.InetSocketAddress].getPort
     try {
       val sock = new java.net.Socket("127.0.0.1", port)
       val out = new java.io.PrintWriter(
@@ -732,7 +752,8 @@ class ServiceSpec extends SparkSpec {
     val service = InProcessConnectorService(engine, new PushService(spark),
       () => fail("unused"))
     val path = root.resolve("control.sock")
-    val srv = new graft.streaming.UnixControlServer(service, path)
+    val srv = new graft.streaming.ControlServer(service,
+      java.net.UnixDomainSocketAddress.of(path))
     srv.start()
     try {
       assert(Files.exists(path), "socket file must exist after start")
@@ -753,7 +774,8 @@ class ServiceSpec extends SparkSpec {
       // restart over the SAME path must succeed (stale-socket recovery)
       srv.stop()
       assert(!Files.exists(path), "stop must remove the socket file")
-      val srv2 = new graft.streaming.UnixControlServer(service, path)
+      val srv2 = new graft.streaming.ControlServer(service,
+        java.net.UnixDomainSocketAddress.of(path))
       srv2.start()
       try {
         val ch2 = java.nio.channels.SocketChannel.open(
@@ -770,25 +792,89 @@ class ServiceSpec extends SparkSpec {
   }
 
   test("control plane with auth_token rejects untokened and wrong-token requests") {
-    val root = Files.createTempDirectory("graft-ctl-auth").toString
+    val root = Files.createTempDirectory("graft-ctl-auth")
     val engine = Engine.fromConfigJson(spark,
-      engineConfig("io.rustconnect.KafkaSourceConnector"), root, s"$root/ckpt")
+      engineConfig("io.rustconnect.KafkaSourceConnector"), root.toString, s"$root/ckpt")
     val service = InProcessConnectorService(engine, new PushService(spark),
       () => fail("unused"))
-    val srv = new graft.streaming.ControlServer(service, port = 0,
-      authToken = Some("s3cr3t"))
-    srv.start()
+    for (address <- controlAddresses(root)) {
+      val srv = new graft.streaming.ControlServer(service, address,
+        authToken = Some("s3cr3t"))
+      try {
+        val client = new LineClient(srv.start())
+        assert(client.ask("""{"verb":"get_status","connector":"src-1"}""")
+          .contains("unauthorized"))
+        assert(client.ask("""{"verb":"get_status","connector":"src-1","token":"wrong"}""")
+          .contains("unauthorized"))
+        assert(client.ask("""{"verb":"get_status","connector":"src-1","token":"s3cr3t"}""")
+          .contains("\"state\""))
+        // and crucially: update_config is gated too
+        assert(client.ask("""{"verb":"update_config","config":{}}""")
+          .contains("unauthorized"))
+        client.close()
+      } finally srv.stop()
+    }
+  }
+
+  test("a unix control socket a live daemon answers on is never hijacked") {
+    val root = Files.createTempDirectory("graft-uds-live")
+    val engine = Engine.fromConfigJson(spark,
+      engineConfig("io.rustconnect.KafkaSourceConnector"), root.toString, s"$root/ckpt")
+    val service = new InProcessConnectorService(engine, pushSink = None)
+    val address = java.net.UnixDomainSocketAddress.of(root.resolve("control.sock"))
+    val a = new graft.streaming.ControlServer(service, address)
+    a.start()
     try {
-      assert(srv.dispatch("""{"verb":"get_status","connector":"src-1"}""")
-        .contains("unauthorized"))
-      assert(srv.dispatch("""{"verb":"get_status","connector":"src-1","token":"wrong"}""")
-        .contains("unauthorized"))
-      assert(srv.dispatch("""{"verb":"get_status","connector":"src-1","token":"s3cr3t"}""")
-        .contains("\"state\""))
-      // and crucially: update_config is gated too
-      assert(srv.dispatch("""{"verb":"update_config","config":{}}""")
-        .contains("unauthorized"))
-    } finally srv.stop()
+      val b = new graft.streaming.ControlServer(service, address)
+      val refused = intercept[IllegalStateException](b.start())
+      assert(refused.getMessage.contains("in use by a live daemon"), refused.getMessage)
+      b.stop() // never bound: must leave the live daemon's socket file alone
+      val client = new LineClient(address)
+      assert(client.ask("""{"verb":"get_status","connector":"src-1"}""").contains("\"state\""))
+      client.close()
+    } finally a.stop()
+  }
+
+  test("stop() ends the control plane's live connections, and the server restarts") {
+    val root = Files.createTempDirectory("graft-ctl-stop")
+    val engine = Engine.fromConfigJson(spark,
+      engineConfig("io.rustconnect.KafkaSourceConnector"), root.toString, s"$root/ckpt")
+    val service = new InProcessConnectorService(engine, pushSink = None)
+    val status = """{"verb":"get_status","connector":"src-1"}"""
+    for (address <- controlAddresses(root)) {
+      val srv = new graft.streaming.ControlServer(service, address)
+      try {
+        val client = new LineClient(srv.start())
+        assert(client.ask(status).contains("\"state\""))
+        srv.stop()
+        // the connection accepted before stop() must answer nothing more
+        val after = scala.util.Try(client.ask(status)).toOption.flatMap(Option(_))
+        assert(after.isEmpty, s"$address answered after stop(): $after")
+        client.close()
+        val again = new LineClient(srv.start())
+        assert(again.ask(status).contains("\"state\""))
+        again.close()
+      } finally srv.stop()
+    }
+  }
+
+  test("the daemon's service answers Push with Err, acks nothing, and fails Flush") {
+    val root = Files.createTempDirectory("graft-daemon-push")
+    val engine = Engine.fromConfigJson(spark,
+      engineConfig("io.rustconnect.KafkaSourceConnector"), root.toString, s"$root/ckpt")
+    // assembled as graft.Main assembles it: no push sink, so no buffer
+    // exists for a Push to grow
+    val service = graft.Main.controlService(engine)
+    val out = service.sinkStream(Iterator(
+      SinkRequest.Push(RecordBatch(Seq(rec(0, "a"), rec(1, "b")))),
+      SinkRequest.Flush(FlushRequest("f-1")))).toList
+    out match {
+      case List(SinkResponse.Err(err), SinkResponse.Flushed(flushed)) =>
+        assert(err.errorMessage.contains("no push sink"), err)
+        assert(flushed.requestId == "f-1" && !flushed.success, flushed)
+        assert(flushed.errorMessage.contains("no push sink"), flushed)
+      case other => fail(s"expected Err then a failed Flushed, got $other")
+    }
   }
 
   test("daemon assembly: push-queue source connector moves pushed records to the sink") {
