@@ -79,7 +79,11 @@ object Main {
 
     def jsonLines(address: java.net.SocketAddress) = {
       val srv = new graft.streaming.ControlServer(svc, address, token)
-      println(s"[graft] control plane listening on ${srv.start()} (JSON lines)")
+      val bound = srv.start() match {
+        case a: java.net.InetSocketAddress => s"${a.getHostString}:${a.getPort}"
+        case u => s"unix:$u"
+      }
+      println(s"[graft] control plane listening on $bound (JSON lines)")
       srv
     }
     val control = engine.config.flatMap(_.jsonTcpBind).map { case (host, port) =>

@@ -80,7 +80,7 @@ final class ControlServer(service: ConnectorService, address: SocketAddress,
 
   /** Close the listener AND every live connection: the handlers are
     * interrupted, which closes their channels, so no verb runs on this
-    * server once `stop` returns.
+    * server once `stop` returns (unless one outlasts the 10 s wait).
     */
   def stop(): Unit = synchronized {
     if (server != null) {
