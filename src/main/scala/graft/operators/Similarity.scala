@@ -423,6 +423,9 @@ object Similarity {
     * (N·graphK rows); seeds + hop are two self-joins of that ids-only
     * relation; embeddings rejoin BY ID once, for the bounded re-rank.
     * Inherits the caller-must-clear-cache contract of the graph build.
+    * The checkpointed edge blocks are not cached relations: Spark's
+    * `ContextCleaner` frees them once the frame is unreachable, not
+    * `clearCache()`.
     */
   def graphTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nPivots: Int = 0, nProbe: Int = 4, graphK: Int = 5,
@@ -435,12 +438,16 @@ object Similarity {
     val corpusRel =
       if (nPivots > 0) corpus
       else corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // caller-must-clear-cache: the seed and hop self-joins both read the
-    // edge relation (sibling stages — eager fill, see Dedup.eagerPersist);
-    // it cannot unpersist before the result materializes
-    val edges = Dedup.eagerPersist(
-      knnGraphPivoted(corpusRel, graphK, nPivots, nProbe)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst")))
+    // the seed join and every hop join are sibling readers of the edge
+    // relation; the eager checkpoint fills it once for all of them. It is
+    // also a lineage cut: a persisted relation reprints its cached plan
+    // (the whole graph build) once per reader, and with one reader per
+    // unrolled hop that outgrew the giant-plan gate. A plain
+    // localCheckpoint, not a BoundedCheckpoints one: the edges are
+    // N·graphK rows and grow with the corpus.
+    val edges = knnGraphPivoted(corpusRel, graphK, nPivots, nProbe)
+      .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
+      .localCheckpoint(eager = true)
     val qids = broadcast(queries.select(col("vec_id").as("query_id")))
     val seeds = edges.join(qids, col("src") === col("query_id"))
       .select(col("query_id"), col("dst").as("cand"))

@@ -202,8 +202,9 @@ class ScaleSpec extends SparkSpec {
     val plan = beam.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       s"graph-ANN must never plan an unkeyed product:\n${plan.take(4000)}")
-    // same convention as the pivoted-graph test: the only nested-loop join
-    // allowed is corpus × pivots inside the cached ranking relation
+    // same convention as the pivoted-graph test: no nested-loop join
+    // outside a cached relation. The corpus × pivots ranking sits behind
+    // the edge checkpoint, so it does not appear in this plan at all
     val mainPlan = plan.split("InMemoryRelation", 2)(0)
     assert(!mainPlan.contains("BroadcastNestedLoopJoin"),
       s"nested-loop join outside the cached pivot ranking:\n${plan.take(4000)}")
@@ -231,6 +232,22 @@ class ScaleSpec extends SparkSpec {
       .join(exact, Seq("query_id", "neighbor_id")).count()
     assert(twoHopHits >= beamHits,
       s"2-hop recall $twoHopHits fell below 1-hop recall $beamHits")
+  }
+
+  test("graph-ANN beam: the graph build is not reprinted per hop") {
+    // every hop joins the edge relation again; the edges are a lineage
+    // cut, so the corpus × pivots ranking inside the graph build must not
+    // be copied into the plan once per reader (that copy grew the
+    // multi-hop plan past the giant-plan gate)
+    val emb = Sources.table(spark, sf0001, "embeddings")
+    val queries = emb.filter(col("vec_id") < 4)
+    val nestedLoops = (1 to 3).map { h =>
+      val plan = Similarity.graphTopK(emb, queries, k = 5, nPivots = 8,
+        nProbe = 2, graphK = 5, hops = h).queryExecution.executedPlan.toString
+      "BroadcastNestedLoopJoin".r.findAllMatchIn(plan).size
+    }
+    assert(nestedLoops.distinct.size == 1,
+      s"nested-loop joins per hop count 1/2/3: ${nestedLoops.mkString("/")}")
   }
 
   test("default pivot count tracks corpus size (~sqrt N, clamped)") {
