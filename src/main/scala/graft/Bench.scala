@@ -62,6 +62,17 @@ object Bench {
       try src.mkString.split("\\s+")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
+  /** The quiet record's standard core count (`SPARK_GRAFT_QUIET_CPUS`,
+    * default 32); a malformed value falls back to 32 with one warning.
+    */
+  private[graft] def quietStandardCpus(raw: Option[String]): Int =
+    raw.fold(32) { v =>
+      v.trim.toIntOption.getOrElse {
+        System.err.println(s"[bench] SPARK_GRAFT_QUIET_CPUS='$v' is not an integer; using 32")
+        32
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -283,7 +294,7 @@ object Bench {
     // the standard width (SPARK_GRAFT_QUIET_CPUS, default 32 — the
     // driver's main-bench topology), which also self-heals the poisoned
     // r15 record on the next standard-width run.
-    val quietStdCpus = sys.env.getOrElse("SPARK_GRAFT_QUIET_CPUS", "32").toInt
+    val quietStdCpus = quietStandardCpus(sys.env.get("SPARK_GRAFT_QUIET_CPUS"))
     def quietTopologyOk: Boolean = {
       val p = java.nio.file.Paths.get("BENCH_QUIET.json")
       if (!java.nio.file.Files.exists(p)) cpus.toInt == quietStdCpus

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -44,11 +46,11 @@ object OutputPartitioners {
     "hour" -> format_string("%02d", hour(ts))
   )
 
-  /** P4 as a transform: appends year/month/day/hour columns. */
+  /** P4 as a transform: appends year/month/day/hour columns, in that
+    * order, in one projection (each `withColumn` would re-run analysis).
+    */
   def withTimePartitions(records: DataFrame): DataFrame =
-    timePartitionColumns(col("timestamp")).foldLeft(records) {
-      case (df, (name, c)) => df.withColumn(name, c)
-    }
+    records.withColumns(ListMap(timePartitionColumns(col("timestamp")): _*))
 
   /** P3: extract the partition field from the value JSON (null when the value
     * isn't JSON or lacks the field). Reference intent per

@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.model.{Compression, Format, PartitionerKind, SinkConfig}
@@ -26,7 +28,16 @@ import graft.operators.{Encode, OutputPartitioners}
   * `repartition(partitionCols)` before the write collapses the file count
   * to one per partition value. The Time partitioner gets this clustering
   * exchange by DEFAULT (its hour grain is always high-cardinality);
-  * `coalescePartitions` opts any other partitioner in.
+  * `coalescePartitions` opts any other partitioner in. The exchange is
+  * left out when the input arrives in at most one partition
+  * ([[arrivesInOnePartition]]): one task then already writes one file per
+  * partition value, and the exchange would only add a shuffle-map job, an
+  * AQE re-plan and a wave of mostly empty write tasks — most of a small
+  * micro-batch's commit (a one-partition push batch on the ack path).
+  * Trade-off: such an input that spans many hours writes all of them on
+  * that one task. The push source plans a single partition only below
+  * 2,000 records and the gRPC push service one per pushed batch, so only
+  * an unusually shaped one-partition source sees it.
   */
 object FileSink {
 
@@ -79,7 +90,7 @@ object FileSink {
         }
         val distributed =
           if ((coalescePartitions || cfg.partitioner == PartitionerKind.Time)
-              && partCols.nonEmpty)
+              && partCols.nonEmpty && !arrivesInOnePartition(records))
             // explicit width (the session's configured shuffle parallelism,
             // scale-set by conf, never a literal): with the width left
             // implicit, AQE's BYTE-based coalescing shrinks this exchange to
@@ -103,6 +114,22 @@ object FileSink {
           .save(path)
         path
     }
+  }
+
+  /** Whether `records` arrives in at most one partition, decided without a
+    * Spark job: its physical plan's RDD is built (inside `foreachBatch` that
+    * plan scans the micro-batch's RDD, already built) but not run. A plan
+    * whose RDD could only be built by running something — an exchange
+    * (adaptive or not: a range exchange samples, a broadcast collects), a
+    * subquery — answers false unbuilt, so those inputs keep the
+    * clustering exchange.
+    */
+  private[graft] def arrivesInOnePartition(records: DataFrame): Boolean = {
+    val plan = records.queryExecution.executedPlan
+    !plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
+    } && plan.execute().getNumPartitions <= 1
   }
 
   /** F4: the raw-bytes encoder — one object per (topic, partition) group,

@@ -626,6 +626,10 @@ final class GrpcUdsControlServer(service: ConnectorService,
     socketPath
   }
 
+  /** Stop serving; the socket file is deleted only if this instance bound
+    * it, so stopping a server whose `start()` was refused leaves a live
+    * daemon's socket alone.
+    */
   def stop(): Unit = synchronized {
     if (server != null) {
       server.shutdownNow()
@@ -633,8 +637,8 @@ final class GrpcUdsControlServer(service: ConnectorService,
       server = null
       boss.shutdownGracefully(); worker.shutdownGracefully()
       boss = null; worker = null
+      java.nio.file.Files.deleteIfExists(socketPath)
     }
-    java.nio.file.Files.deleteIfExists(socketPath)
   }
 }
 

@@ -160,4 +160,12 @@ class ConfigSpec extends AnyFunSuite {
     assert(engine.config.map(_.connectors.head.name).contains("kafka-source-v2"))
     assert(engine.status == Map("kafka-source-v2" -> graft.model.ConnectorState.Uninitialized))
   }
+
+  test("Bench: a malformed SPARK_GRAFT_QUIET_CPUS falls back to 32") {
+    assert(Bench.quietStandardCpus(None) == 32)
+    assert(Bench.quietStandardCpus(Some("8")) == 8)
+    assert(Bench.quietStandardCpus(Some(" 16 ")) == 16)
+    assert(Bench.quietStandardCpus(Some("32cores")) == 32)
+    assert(Bench.quietStandardCpus(Some("")) == 32)
+  }
 }

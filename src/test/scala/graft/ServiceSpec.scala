@@ -655,6 +655,36 @@ class ServiceSpec extends SparkSpec {
     }
   }
 
+  test("a unix gRPC socket a live daemon answers on is never hijacked") {
+    import org.sparkproject.connect.protobuf.DynamicMessage
+    import graft.streaming.{ConnectorProto, GrpcControlClient, GrpcUdsControlServer, GrpcWire}
+    assume(GrpcUdsControlServer.available, "epoll native transport not available")
+    val root = Files.createTempDirectory("graft-grpc-uds-live")
+    val engine = Engine.fromConfigJson(spark,
+      engineConfig("io.rustconnect.KafkaSourceConnector"), root.toString, s"$root/ckpt")
+    val service = new InProcessConnectorService(engine, pushSink = None)
+    val path = root.resolve("grpc.sock")
+    val a = new GrpcUdsControlServer(service, path)
+    a.start()
+    try {
+      val b = new GrpcUdsControlServer(service, path)
+      val refused = intercept[IllegalStateException](b.start())
+      assert(refused.getMessage.contains("in use by a live daemon"), refused.getMessage)
+      b.stop() // never bound: must leave the live daemon's socket file alone
+      assert(Files.exists(path), "a refused server's stop() removed the live socket")
+      val ch = GrpcControlClient.udsChannel(path)
+      try {
+        val d = ConnectorProto.messageType("StatusRequest")
+        val req = DynamicMessage.newBuilder(d)
+          .setField(d.findFieldByName("connector_name"), "src-1").build()
+        val status = GrpcControlClient.unary(ch, GrpcWire.getStatusMethod, req)
+        assert(status.getField(
+          status.getDescriptorForType.findFieldByName("state")).toString == "UNASSIGNED")
+      } finally ch.shutdownNow()
+    } finally a.stop()
+    assert(!Files.exists(path), "the bound server's stop() must remove its socket file")
+  }
+
   test("gRPC SinkStream moves record batches into the sink — the test_grpc_sink.py path") {
     import org.sparkproject.connect.protobuf.{ByteString, DynamicMessage}
     import org.sparkproject.connect.grpc.stub.{ClientCalls, StreamObserver}

@@ -2,8 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model.{Format, KafkaRecord, PartitionerKind, SinkConfig}
 import graft.sinks.FileSink
@@ -83,6 +91,126 @@ class SinkSpec extends SparkSpec {
     assert(files.size == 2,
       s"expected one file per partition value, got ${files.size}: $files")
     assert(spark.read.parquet(root).count() == 3)
+  }
+
+  /** Runs `body` and returns what it ran: the number of Spark jobs it
+    * started and the executed plans of its SQL executions. A marker job
+    * after `body` flushes the listener bus: events reach listeners in
+    * order, so once the marker's start is seen, every event of `body` is.
+    */
+  private def observed(body: => Unit): (Int, Seq[SparkPlan]) = {
+    val group = s"sinkspec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      sc.setJobGroup(group, "observed")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (jobs.get, plans.asScala.toSeq)
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  /** Every node of a plan, through adaptive plans and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def parquetFiles(root: String): List[String] =
+    Files.walk(Paths.get(root)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(_.toString).toList
+
+  test("a one-partition time-partitioned batch commits in one job, with no exchange") {
+    // the push batch's shape: an RDD scan of one partition, two hours in it
+    val root = tmp()
+    val cfg = SinkConfig(bucketName = "b", format = Format.Parquet,
+      partitioner = PartitionerKind.Time)
+    val input = spark.sparkContext.parallelize(recs, 1).toDF()
+    val (jobs, plans) = observed(FileSink.writeBatch(input, cfg, root))
+    val writes = plans.filter(_.treeString.contains(root))
+    assert(writes.size == 1, s"one write execution expected: $plans")
+    assert(!nodes(writes.head).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"a one-partition input must not be shuffled:\n${writes.head}")
+    assert(jobs == 1, s"$jobs Spark jobs for one one-partition write")
+    // one task wrote every partition value, so still one file per value
+    assert(parquetFiles(root).size == 2)
+    assert(spark.read.parquet(root).count() == 3)
+  }
+
+  test("a multi-partition time-partitioned batch still plans the clustering exchange") {
+    val root = tmp()
+    val cfg = SinkConfig(bucketName = "b", format = Format.Parquet,
+      partitioner = PartitionerKind.Time)
+    // no exchange of its own: the partition count decides
+    val input = spark.sparkContext.parallelize(recs, 3).toDF()
+    val (_, plans) = observed(FileSink.writeBatch(input, cfg, root))
+    val writes = plans.filter(_.treeString.contains(root))
+    assert(writes.size == 1, s"one write execution expected: $plans")
+    assert(nodes(writes.head).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      s"a 3-partition input must be clustered:\n${writes.head}")
+    assert(parquetFiles(root).size == 2)
+  }
+
+  test("the one-partition check runs no job and answers false where it cannot know") {
+    val one = spark.sparkContext.parallelize(recs, 1).toDF()
+    val (jobs, _) = observed {
+      assert(FileSink.arrivesInOnePartition(one))
+      assert(FileSink.arrivesInOnePartition(one.filter($"offset" > 0)))
+      assert(FileSink.arrivesInOnePartition(spark.sparkContext.emptyRDD[KafkaRecord].toDF()))
+      assert(!FileSink.arrivesInOnePartition(spark.sparkContext.parallelize(recs, 3).toDF()))
+      // an exchange (under AQE) would need a job to count, also behind a cache
+      assert(!FileSink.arrivesInOnePartition(recs.toDF().repartition(1)))
+      val cachedShuffle = recs.toDF().repartition(1).cache()
+      val cachedScan = spark.sparkContext.parallelize(recs, 1).toDF().cache()
+      try {
+        assert(!FileSink.arrivesInOnePartition(cachedShuffle.select("*")))
+        assert(FileSink.arrivesInOnePartition(cachedScan.select("*")))
+      } finally { cachedShuffle.unpersist(); cachedScan.unpersist() }
+    }
+    assert(jobs == 0, s"the check ran $jobs Spark jobs")
+  }
+
+  test("withTimePartitions equals the four-withColumn fold in one projection") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import graft.operators.OutputPartitioners
+    def fold(df: org.apache.spark.sql.DataFrame) =
+      OutputPartitioners.timePartitionColumns(col("timestamp")).foldLeft(df) {
+        case (d, (name, c)) => d.withColumn(name, c)
+      }
+    // a plain input, and one whose existing "hour" column is replaced in place
+    for (input <- Seq(recs.toDF(), recs.toDF().withColumn("hour", lit("x")))) {
+      val one = OutputPartitioners.withTimePartitions(input)
+      val expected = fold(input)
+      assert(one.schema == expected.schema)
+      assert(one.collect().toSeq == expected.collect().toSeq)
+      val projects = one.queryExecution.analyzed.collect { case p: Project => p }.size -
+        input.queryExecution.analyzed.collect { case p: Project => p }.size
+      assert(projects == 1, s"$projects projections for the hour columns")
+    }
   }
 
   test("registerPartitioned quotes the DDL: quoted path, odd name, bad format") {
