@@ -29,6 +29,11 @@ import graft.streaming.{Engine, InProcessConnectorService}
   * records move end-to-end with no broker.
   */
 object Main {
+  /** Hadoop shutdown-hook priority of the daemon's stop: above the 40 of
+    * Spark's own hook, so the stop runs while the SparkContext is alive.
+    */
+  private val ShutdownPriority = 50
+
   /** The service every control front serves. No query reads a push buffer
     * in the daemon, so no push sink is wired: SinkStream Push answers Err.
     */
@@ -114,14 +119,19 @@ object Main {
     engine.start()
     println(s"[graft] connector status: ${engine.status}")
 
-    sys.addShutdownHook {
+    // Spark stops its SparkContext from a hook on Hadoop's shutdown-hook
+    // manager (priority 40). A plain JVM hook runs concurrently with it, so
+    // engine.stop() could find the context stopped; a hook on the same
+    // manager at a higher priority finishes before Spark's starts.
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
       println("[graft] shutting down")
       grpcControl.foreach(_.stop())
       grpcUds.foreach(_.stop())
       control.foreach(_.stop())
       udsControl.foreach(_.stop())
       engine.stop()
-    }
+      println(s"[graft] stopped; connector status: ${engine.status}")
+    }, ShutdownPriority)
     // block like the reference's ctrl_c().await: runs until a query
     // terminates (failure surfaces here) or the JVM is signalled
     spark.streams.awaitAnyTermination()

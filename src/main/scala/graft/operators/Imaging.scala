@@ -3,6 +3,7 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,15 +42,6 @@ import org.apache.spark.sql.functions._
   * addressing that survives re-encode, resize and small edits.
   */
 object Imaging {
-
-  // ImageIO defaults to DISK-backed scratch streams — a temp file per
-  // encode/decode call; all sources/sinks here are byte arrays, so the
-  // file cache is pure overhead, and with the generator passes spread
-  // across cores (r16) 32 concurrent tasks serialize on temp-file
-  // create/delete (profiled: the image-hash pass ran 40× slower per row
-  // at 32 tasks than at 1). Memory-cached streams remove the filesystem
-  // from the loop entirely.
-  ImageIO.setUseCache(false)
 
   /** Spread a compute-bound generator input across cores (r16, SCALE.md
     * round-7 lesson / guide §1.2 step 2): the media UDF passes (encode +
@@ -126,12 +118,24 @@ object Imaging {
     out
   }
 
+  // Codec streams: decode, encodePng and encodeJpeg wrap their byte arrays
+  // in memory-cached image streams. ImageIO's default streams are
+  // DISK-backed, a temp file per call: pure overhead for byte arrays, and
+  // with the generator passes spread across cores (r16) 32 concurrent
+  // tasks serialize on temp-file create/delete (profiled: the image-hash
+  // pass ran 40× slower per row at 32 tasks than at 1). Explicit streams
+  // keep the filesystem out of the loop without touching ImageIO's
+  // process-wide cache setting.
+
   /** Real codec decode. Throws if the bytes aren't a readable image —
     * production would route these to a quarantine sink; here a decode
     * failure should fail the query loudly.
     */
   def decode(bytes: Array[Byte]): BufferedImage = {
-    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+    val iis = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    // ImageIO.read closes the stream unless no reader takes the bytes
+    val img = ImageIO.read(iis)
+    if (img == null) iis.close()
     require(img != null, s"undecodable image (${bytes.length} bytes)")
     img
   }
@@ -150,7 +154,8 @@ object Imaging {
       y += 1
     }
     val bos = new ByteArrayOutputStream(1024)
-    ImageIO.write(img, "png", bos)
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try ImageIO.write(img, "png", ios) finally ios.close()
     bos.toByteArray
   }
 
@@ -173,7 +178,7 @@ object Imaging {
     param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
     param.setCompressionQuality(quality)
     val bos = new ByteArrayOutputStream(1024)
-    val ios = ImageIO.createImageOutputStream(bos)
+    val ios = new MemoryCacheImageOutputStream(bos)
     try {
       writer.setOutput(ios)
       writer.write(null, new IIOImage(img, null, null), param)

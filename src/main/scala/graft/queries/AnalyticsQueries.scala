@@ -53,6 +53,22 @@ object AnalyticsQueries {
   private[graft] def moneySumSql(e: String): String =
     s"CAST(round(sum(CAST($e AS DECIMAL(18,6))), 2) AS DOUBLE)"
 
+  /** TPC-H Q5's shape (ASIA revenue per nation, 1996–1997): the oracle of
+    * `q5_region_revenue`, and for `q5_region_revenue_sql` both the query
+    * and its oracle.
+    */
+  private val q5Sql =
+    s"""SELECT n_name, ${moneySumSql("l_extendedprice * (1 - l_discount)")} AS revenue
+       |FROM lineitem
+       |JOIN orders ON l_orderkey = o_orderkey
+       |JOIN customer ON o_custkey = c_custkey
+       |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+       |JOIN nation ON c_nationkey = n_nationkey
+       |JOIN region ON n_regionkey = r_regionkey
+       |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01'
+       |  AND o_orderdate < TIMESTAMP '1998-01-01'
+       |GROUP BY n_name""".stripMargin
+
   val defs: Map[String, (Q, Option[String])] = Map(
 
     // The contract's canonical smoke aggregation.
@@ -136,16 +152,7 @@ object AnalyticsQueries {
           .groupBy("n_name")
           .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
       },
-      Some(s"""SELECT n_name, ${moneySumSql("l_extendedprice * (1 - l_discount)")} AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin)
+      Some(q5Sql)
     )),
 
     // The same query through the literal SQL surface (spark.sql over temp
@@ -159,27 +166,9 @@ object AnalyticsQueries {
         // the identical SQL text runs on Spark and DuckDB — the money sum is
         // spelled portably (CAST/round/DECIMAL are ANSI) so one string serves
         // as both the query and its own oracle
-        s.sql(s"""SELECT n_name, ${moneySumSql("l_extendedprice * (1 - l_discount)")} AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01'
-          |  AND o_orderdate < TIMESTAMP '1998-01-01'
-          |GROUP BY n_name""".stripMargin)
+        s.sql(q5Sql)
       },
-      Some(s"""SELECT n_name, ${moneySumSql("l_extendedprice * (1 - l_discount)")} AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin)
+      Some(q5Sql)
     )),
 
     // Left-semi join: orders having any heavy lineitem.
@@ -2061,22 +2050,7 @@ object AnalyticsQueries {
     // sketches, never raw data.
     "q_theta_sketch" -> ((
       (s: SparkSession, dir: String) => {
-        val ev = t(s, dir, "events")
-        val elems = ev.select(col("event_type").as("t"),
-            (col("user_id") * 1000 +
-              datediff(to_date(col("ts")), lit("2024-01-01")).cast("long")).as("elem"))
-          .distinct()
-          .eagerPersisted
-        val hashed = elems.select(col("t"),
-          conv(substring(md5(col("elem").cast("string")), 1, 12), 16, 10)
-            .cast("long").as("h")).distinct()
-        val w = Window.partitionBy("t").orderBy("h")
-        val sk = hashed.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 64)
-          .eagerPersisted
-        val theta = sk.filter(col("rn") === 64).select(col("t"), col("h").as("theta"))
-        val est = theta.select(col("t"),
-          expr("63 * 281474976710656 div theta").as("est"))
+        val (elems, sk, theta, est) = QueryUtil.thetaSketches(t(s, dir, "events"))
         // sketch relations are k rows per key by construction — broadcast
         // them; only the exact-intersection join below is legitimately
         // fact-fact (it exists to measure the sketch, not to serve it)
@@ -2101,14 +2075,7 @@ object AnalyticsQueries {
             expr("m * 281474976710656 div th").as("est_inter"),
             coalesce(col("exact_inter"), lit(0L)).as("exact_inter"))
       },
-      Some("""WITH el AS (SELECT DISTINCT event_type AS t,
-        |    user_id * 1000 + date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS elem
-        |  FROM events),
-        |hd AS (SELECT DISTINCT t, CAST(list_sum(list_transform(range(1, 13),
-        |    i -> (strpos('0123456789abcdef',
-        |           substr(md5(CAST(elem AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |         * 16.0 ** (12 - i))) AS BIGINT) AS h
-        |  FROM el),
+      Some(s"""WITH ${OracleSql.thetaHashes},
         |sk AS (SELECT t, h, row_number() OVER (PARTITION BY t ORDER BY h) AS rn
         |  FROM hd QUALIFY rn <= 64),
         |theta AS (SELECT t, h AS theta FROM sk WHERE rn = 64),
@@ -2143,21 +2110,7 @@ object AnalyticsQueries {
     // fact-fact.
     "q_theta_diff" -> ((
       (s: SparkSession, dir: String) => {
-        val ev = t(s, dir, "events")
-        val elems = ev.select(col("event_type").as("t"),
-            (col("user_id") * 1000 +
-              datediff(to_date(col("ts")), lit("2024-01-01")).cast("long")).as("elem"))
-          .distinct()
-          .eagerPersisted
-        val hashed = elems.select(col("t"),
-          conv(substring(md5(col("elem").cast("string")), 1, 12), 16, 10)
-            .cast("long").as("h")).distinct()
-        val w = Window.partitionBy("t").orderBy("h")
-        val sk = hashed.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 64)
-          .eagerPersisted
-        val theta = sk.filter(col("rn") === 64).select(col("t"), col("h").as("theta"))
-        val est = theta.select(col("t"), expr("63 * 281474976710656 div theta").as("est"))
+        val (elems, sk, theta, est) = QueryUtil.thetaSketches(t(s, dir, "events"))
         val pairs = theta.as("a").join(broadcast(theta.as("b")), col("a.t") =!= col("b.t"))
           .select(col("a.t").as("type_a"), col("b.t").as("type_b"),
             least(col("a.theta"), col("b.theta")).as("th"))
@@ -2181,14 +2134,7 @@ object AnalyticsQueries {
               .as("est_diff"),
             (col("na") - coalesce(col("xi"), lit(0L))).as("exact_diff"))
       },
-      Some("""WITH el AS (SELECT DISTINCT event_type AS t,
-        |    user_id * 1000 + date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS elem
-        |  FROM events),
-        |hd AS (SELECT DISTINCT t, CAST(list_sum(list_transform(range(1, 13),
-        |    i -> (strpos('0123456789abcdef',
-        |           substr(md5(CAST(elem AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |         * 16.0 ** (12 - i))) AS BIGINT) AS h
-        |  FROM el),
+      Some(s"""WITH ${OracleSql.thetaHashes},
         |sk AS MATERIALIZED (SELECT t, h, row_number() OVER (PARTITION BY t ORDER BY h) AS rn
         |  FROM hd QUALIFY rn <= 64),
         |theta AS (SELECT t, h AS theta FROM sk WHERE rn = 64),
@@ -4655,25 +4601,8 @@ object AnalyticsQueries {
     // over orders, so the plan is SF-proportional only in the scans.
     "q_kaplan_meier" -> ((
       (s: SparkSession, dir: String) => {
-        val o = t(s, dir, "orders")
-          .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"))
-        val f = o.groupBy("o_custkey").agg(min("d").as("fd"))
-        val s2 = o.join(f, Seq("o_custkey")).filter(col("d") > col("fd"))
-          .groupBy("o_custkey").agg(min("d").as("sd"))
-        val maxd = o.agg(max("d").as("maxd"))
-        val subj = f.join(s2, Seq("o_custkey"), "left").crossJoin(broadcast(maxd))
-          .select(
-            when(col("sd").isNotNull, datediff(col("sd"), col("fd")))
-              .otherwise(datediff(col("maxd"), col("fd"))).cast("long").as("t"),
-            col("sd").isNotNull.cast("long").as("ev"))
-        val byT = subj.groupBy("t").agg(count(lit(1)).as("a"), sum("ev").as("d_events"))
-        val nn = byT.agg(sum("a").as("nn"))
         val w = Window.orderBy("t")
-        byT.crossJoin(broadcast(nn))
-          .withColumn("cuma", sum("a").over(w))
-          .select(col("t"), col("d_events"),
-            (col("nn") - col("cuma") + col("a")).as("n_risk"))
-          .filter(col("d_events") > 0)
+        QueryUtil.secondOrderRiskSet(t(s, dir, "orders"))
           .withColumn("term",
             floor(lit(1e6) * log(greatest(
               lit(1.0) - col("d_events").cast("double") / col("n_risk").cast("double"),
@@ -4681,21 +4610,7 @@ object AnalyticsQueries {
           .withColumn("log_surv_micro", sum("term").over(w))
           .select(col("t").as("t_days"), col("n_risk"), col("d_events"), col("log_surv_micro"))
       },
-      Some("""WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d FROM orders),
-        |f AS (SELECT o_custkey, min(d) AS fd FROM o GROUP BY 1),
-        |s2 AS (SELECT o.o_custkey, min(d) AS sd
-        |  FROM o JOIN f ON o.o_custkey = f.o_custkey AND o.d > f.fd GROUP BY 1),
-        |mx AS (SELECT max(d) AS maxd FROM o),
-        |subj AS (SELECT
-        |    CAST(CASE WHEN s2.sd IS NOT NULL THEN date_diff('day', f.fd, s2.sd)
-        |         ELSE date_diff('day', f.fd, mx.maxd) END AS BIGINT) AS t,
-        |    CAST(CASE WHEN s2.sd IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS ev
-        |  FROM f LEFT JOIN s2 ON f.o_custkey = s2.o_custkey CROSS JOIN mx),
-        |byt AS (SELECT t, CAST(count(*) AS BIGINT) AS a,
-        |    CAST(sum(ev) AS BIGINT) AS d_events FROM subj GROUP BY 1),
-        |n AS (SELECT CAST(sum(a) AS BIGINT) AS nn FROM byt),
-        |risk AS (SELECT t, d_events,
-        |    nn - sum(a) OVER (ORDER BY t) + a AS n_risk FROM byt CROSS JOIN n),
+      Some(s"""WITH ${OracleSql.secondOrderRiskSet},
         |ev AS (SELECT t, n_risk, d_events,
         |    CAST(floor(1e6 * ln(greatest(
         |      1.0 - CAST(d_events AS DOUBLE) / n_risk, 1e-12))) AS BIGINT) AS term
@@ -5123,33 +5038,7 @@ object AnalyticsQueries {
     // bit-identical statistics with no row-level float reduction anywhere.
     "q_welch_ttest" -> ((
       (s: SparkSession, dir: String) => {
-        val x = col("o_totalprice").cast("decimal(18,6)")
-        // squares multiply at width 19: both engines then run the exact
-        // int128 decimal path ((19,6)^2 -> (38,12)); a width-18 square
-        // overflows DuckDB's int64 fast path on real order totals
-        val xx = col("o_totalprice").cast("decimal(19,6)")
-        val zero = lit(0).cast("decimal(18,6)")
-        val zz = lit(0).cast("decimal(19,6)")
-        val isA = col("o_orderpriority") === "1-URGENT"
-        val a = t(s, dir, "orders").agg(
-          sum(when(isA, 1L).otherwise(0L)).as("na"),
-          sum(when(isA, x).otherwise(zero)).as("sa"),
-          sum(when(isA, xx * xx).otherwise(zz * zz)).as("saa"),
-          sum(when(!isA, 1L).otherwise(0L)).as("nb"),
-          sum(when(!isA, x).otherwise(zero)).as("sb"),
-          sum(when(!isA, xx * xx).otherwise(zz * zz)).as("sbb"))
-        a.select(col("na"), col("nb"),
-            (col("sa").cast("double") / col("na")).as("mean_a"),
-            (col("sb").cast("double") / col("nb")).as("mean_b"),
-            // n = 1 guard (r11 ADVICE): (s2 - s^2/1)/0 is NaN in Spark but
-            // engine-divergent in DuckDB — NULL the undefined variance
-            // explicitly on both engines (the n_lincoln m=0 fix pattern)
-            when(col("na") > 1,
-              (col("saa").cast("double") - col("sa").cast("double") * col("sa").cast("double")
-                / col("na")) / (col("na") - 1)).otherwise(lit(null)).as("var_a"),
-            when(col("nb") > 1,
-              (col("sbb").cast("double") - col("sb").cast("double") * col("sb").cast("double")
-                / col("nb")) / (col("nb") - 1)).otherwise(lit(null)).as("var_b"))
+        QueryUtil.urgentVsRestMoments(t(s, dir, "orders"))
           .select(col("na"), col("nb"),
             // rounded to 6 decimals (q_corr_stats precedent): the two
             // engines' decimal->double casts of the int128-scaled sums can
@@ -5160,25 +5049,7 @@ object AnalyticsQueries {
               / (pow(col("var_a") / col("na"), 2.0) / (col("na") - 1)
                 + pow(col("var_b") / col("nb"), 2.0) / (col("nb") - 1)), 6).as("df_welch"))
       },
-      Some("""WITH agg AS (SELECT
-        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(o_totalprice AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END) AS sa,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(o_totalprice AS DECIMAL(19,6)) * CAST(o_totalprice AS DECIMAL(19,6))
-        |        ELSE CAST(0 AS DECIMAL(19,6)) * CAST(0 AS DECIMAL(19,6)) END) AS saa,
-        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 0 ELSE 1 END) AS BIGINT) AS nb,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(0 AS DECIMAL(18,6)) ELSE CAST(o_totalprice AS DECIMAL(18,6)) END) AS sb,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(0 AS DECIMAL(19,6)) * CAST(0 AS DECIMAL(19,6))
-        |        ELSE CAST(o_totalprice AS DECIMAL(19,6)) * CAST(o_totalprice AS DECIMAL(19,6)) END) AS sbb
-        |  FROM orders),
-        |m AS (SELECT na, nb,
-        |    CAST(sa AS DOUBLE) / na AS mean_a, CAST(sb AS DOUBLE) / nb AS mean_b,
-        |    CASE WHEN na > 1 THEN (CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1) END AS var_a,
-        |    CASE WHEN nb > 1 THEN (CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / nb) / (nb - 1) END AS var_b
-        |  FROM agg)
+      Some(s"""WITH ${OracleSql.urgentVsRestMoments}
         |SELECT na, nb,
         |  round((mean_a - mean_b) / sqrt(var_a / na + var_b / nb), 6) AS t_stat,
         |  round(pow(var_a / na + var_b / nb, 2.0)
@@ -5199,11 +5070,7 @@ object AnalyticsQueries {
     // (`percentile`, not approx) over identically-computed doubles.
     "q_theil_sen" -> ((
       (s: SparkSession, dir: String) => {
-        val monthly = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"),
-            (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
+        val monthly = QueryUtil.nationMonthlyRevenue(t(s, dir, "orders"), t(s, dir, "customer"))
         val a = monthly.select(col("nk"), col("m").as("m1"), col("y").as("y1"))
         val b = monthly.select(col("nk"), col("m").as("m2"), col("y").as("y2"))
         a.join(b, Seq("nk")).filter(col("m2") > col("m1"))
@@ -5218,12 +5085,7 @@ object AnalyticsQueries {
             expr("CAST(floor(1e2 * percentile(slope, 0.5)) AS LONG)")
               .as("sen_slope_cents"))
       },
-      Some("""WITH monthly AS (
-        |  SELECT c_nationkey AS nk,
-        |    year(CAST(o_orderdate AS DATE)) * 12 + month(CAST(o_orderdate AS DATE)) AS m,
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.nationMonthlyRevenue},
         |pairs AS (
         |  SELECT a.nk, (b.y - a.y) / CAST(b.m - a.m AS DOUBLE) AS slope
         |  FROM monthly a JOIN monthly b ON a.nk = b.nk AND b.m > a.m)
@@ -5246,25 +5108,8 @@ object AnalyticsQueries {
     // against one-row aggregates.
     "q_fdr_bh" -> ((
       (s: SparkSession, dir: String) => {
-        val per = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("o_orderdate") >= "1999-01-01", 1L).otherwise(0L)).as("k"))
-        val g = per.agg(sum("n").cast("double").as("tn"),
-          sum("k").cast("double").as("tk"), count(lit(1)).as("m"))
-        val d = col("k").cast("double") / col("n") - col("tk") / col("tn")
-        val st = per.crossJoin(g)
-          .select(col("nk"), col("n"), col("k"), col("m"),
-            (lit(0.6931471805599453) - lit(2.0) * col("n") * d * d).as("lnp"))
-        val i = st.select(col("nk").as("ink"), col("n"), col("k"),
-          col("m"), col("lnp").as("ilnp"))
-        val j = st.select(col("nk").as("jnk"), col("lnp").as("jlnp"))
-        val ranked = i.join(j,
-            col("jlnp") < col("ilnp") ||
-              (col("jlnp") === col("ilnp") && col("jnk") < col("ink")), "left")
-          .groupBy(col("ink"), col("n"), col("k"), col("m"), col("ilnp"))
-          .agg((count(col("jnk")) + 1L).as("bh_rank"))
+        val ranked = QueryUtil.nationRateRanks(t(s, dir, "orders"), t(s, dir, "customer"),
+            "bh_rank")
         val kstar = ranked
           .agg(max(when(col("ilnp") <= log(col("bh_rank") * 0.05 / col("m")),
             col("bh_rank"))).as("kstar"))
@@ -5276,18 +5121,7 @@ object AnalyticsQueries {
             when(col("bh_rank") <= coalesce(col("kstar"), lit(0L)), 1L)
               .otherwise(0L).as("discovered"))
       },
-      Some("""WITH per AS (
-        |  SELECT c_nationkey AS nk, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN CAST(o_orderdate AS DATE) >= DATE '1999-01-01'
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1),
-        |g AS (SELECT CAST(sum(n) AS DOUBLE) AS tn, CAST(sum(k) AS DOUBLE) AS tk,
-        |    CAST(count(*) AS BIGINT) AS m FROM per),
-        |st AS (SELECT nk, n, k, m,
-        |    0.6931471805599453 - 2.0 * n
-        |      * (CAST(k AS DOUBLE) / n - tk / tn)
-        |      * (CAST(k AS DOUBLE) / n - tk / tn) AS lnp
-        |  FROM per, g),
+      Some(s"""WITH ${OracleSql.nationRateTests},
         |ranked AS (SELECT i.nk, i.n, i.k, i.m, i.lnp,
         |    CAST(1 + count(j.nk) AS BIGINT) AS bh_rank
         |  FROM st i LEFT JOIN st j
@@ -5545,11 +5379,7 @@ object AnalyticsQueries {
     // is |nation| × calendar² — SF-invariant — as a nation-keyed join.
     "q_mann_kendall" -> ((
       (s: SparkSession, dir: String) => {
-        val monthly = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"),
-            (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
+        val monthly = QueryUtil.nationMonthlyRevenue(t(s, dir, "orders"), t(s, dir, "customer"))
           .eagerPersisted
         val a = monthly.select(col("nk"), col("m").as("m1"), col("y").as("y1"))
         val b = monthly.select(col("nk"), col("m").as("m2"), col("y").as("y2"))
@@ -5572,12 +5402,7 @@ object AnalyticsQueries {
                 (col("s_stat") + 1).cast("double") / sqrt(col("var_s")))
               .otherwise(0.0), 6).as("z_mk"))
       },
-      Some("""WITH monthly AS (
-        |  SELECT c_nationkey AS nk,
-        |    year(CAST(o_orderdate AS DATE)) * 12 + month(CAST(o_orderdate AS DATE)) AS m,
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.nationMonthlyRevenue},
         |s AS (SELECT a.nk, CAST(sum(CASE WHEN b.y > a.y THEN 1
         |      WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
         |  FROM monthly a JOIN monthly b ON a.nk = b.nk AND b.m > a.m
@@ -5667,11 +5492,7 @@ object AnalyticsQueries {
     // set). H and its tie correction are doubles over exact counts.
     "q_kruskal_wallis" -> ((
       (s: SparkSession, dir: String) => {
-        val grid = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"),
-            (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
+        val grid = QueryUtil.nationMonthlyRevenue(t(s, dir, "orders"), t(s, dir, "customer"))
           .eagerPersisted
         val vals = grid.groupBy("y").agg(count(lit(1)).as("cv"))
         val wv = Window.orderBy("y")
@@ -6090,25 +5911,8 @@ object AnalyticsQueries {
     // prefix rule as one conditional aggregate.
     "q_holm_bonferroni" -> ((
       (s: SparkSession, dir: String) => {
-        val per = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("o_orderdate") >= "1999-01-01", 1L).otherwise(0L)).as("k"))
-        val g = per.agg(sum("n").cast("double").as("tn"),
-          sum("k").cast("double").as("tk"), count(lit(1)).as("m"))
-        val d = col("k").cast("double") / col("n") - col("tk") / col("tn")
-        val st = per.crossJoin(g)
-          .select(col("nk"), col("n"), col("k"), col("m"),
-            (lit(0.6931471805599453) - lit(2.0) * col("n") * d * d).as("lnp"))
-        val i = st.select(col("nk").as("ink"), col("n"), col("k"),
-          col("m"), col("lnp").as("ilnp"))
-        val j = st.select(col("nk").as("jnk"), col("lnp").as("jlnp"))
-        val ranked = i.join(j,
-            col("jlnp") < col("ilnp") ||
-              (col("jlnp") === col("ilnp") && col("jnk") < col("ink")), "left")
-          .groupBy(col("ink"), col("n"), col("k"), col("m"), col("ilnp"))
-          .agg((count(col("jnk")) + 1L).as("rank"))
+        val ranked = QueryUtil.nationRateRanks(t(s, dir, "orders"), t(s, dir, "customer"),
+            "rank")
           .withColumn("pass",
             col("ilnp") <= log(lit(0.05) / (col("m") - col("rank") + 1)))
         val kfail = ranked
@@ -6119,18 +5923,7 @@ object AnalyticsQueries {
             round(col("ilnp"), 6).as("lnp"), col("rank"),
             when(col("rank") < col("kfail"), 1L).otherwise(0L).as("discovered"))
       },
-      Some("""WITH per AS (
-        |  SELECT c_nationkey AS nk, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN CAST(o_orderdate AS DATE) >= DATE '1999-01-01'
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1),
-        |g AS (SELECT CAST(sum(n) AS DOUBLE) AS tn, CAST(sum(k) AS DOUBLE) AS tk,
-        |    CAST(count(*) AS BIGINT) AS m FROM per),
-        |st AS (SELECT nk, n, k, m,
-        |    0.6931471805599453 - 2.0 * n
-        |      * (CAST(k AS DOUBLE) / n - tk / tn)
-        |      * (CAST(k AS DOUBLE) / n - tk / tn) AS lnp
-        |  FROM per, g),
+      Some(s"""WITH ${OracleSql.nationRateTests},
         |ranked AS (SELECT i.nk, i.n, i.k, i.m, i.lnp,
         |    CAST(count(j.nk) + 1 AS BIGINT) AS rank,
         |    i.lnp <= ln(0.05 / (i.m - (count(j.nk) + 1) + 1)) AS pass
@@ -6830,11 +6623,7 @@ object AnalyticsQueries {
     // |nation| × (calendar/12)² pair stage, pure integer statistic.
     "q_mann_kendall_seasonal" -> ((
       (s: SparkSession, dir: String) => {
-        val monthly = t(s, dir, "orders")
-          .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_nationkey").as("nk"),
-            (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
+        val monthly = QueryUtil.nationMonthlyRevenue(t(s, dir, "orders"), t(s, dir, "customer"))
           .withColumn("moy", col("m") % 12)
           .eagerPersisted
         val a = monthly.select(col("nk"), col("moy"), col("m").as("m1"), col("y").as("y1"))
@@ -6855,12 +6644,7 @@ object AnalyticsQueries {
                 (col("s_stat") + 1).cast("double") / sqrt(col("v18").cast("double") / 18.0))
               .otherwise(0.0), 6).as("z_smk"))
       },
-      Some("""WITH monthly AS (
-        |  SELECT c_nationkey AS nk,
-        |    year(CAST(o_orderdate AS DATE)) * 12 + month(CAST(o_orderdate AS DATE)) AS m,
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS y
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.nationMonthlyRevenue},
         |mm AS (SELECT nk, m, m % 12 AS moy, y FROM monthly),
         |s AS (SELECT a.nk, CAST(sum(CASE WHEN b.y > a.y THEN 1
         |      WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
@@ -7174,30 +6958,7 @@ object AnalyticsQueries {
     // the 100 TB plan is a map-side partial + 1-row final.
     "q_cohens_d" -> ((
       (s: SparkSession, dir: String) => {
-        val x = col("o_totalprice").cast("decimal(18,6)")
-        val xx = col("o_totalprice").cast("decimal(19,6)")
-        val zero = lit(0).cast("decimal(18,6)")
-        val zz = lit(0).cast("decimal(19,6)")
-        val isA = col("o_orderpriority") === "1-URGENT"
-        t(s, dir, "orders").agg(
-            sum(when(isA, 1L).otherwise(0L)).as("na"),
-            sum(when(isA, x).otherwise(zero)).as("sa"),
-            sum(when(isA, xx * xx).otherwise(zz * zz)).as("saa"),
-            sum(when(!isA, 1L).otherwise(0L)).as("nb"),
-            sum(when(!isA, x).otherwise(zero)).as("sb"),
-            sum(when(!isA, xx * xx).otherwise(zz * zz)).as("sbb"))
-          .select(col("na"), col("nb"),
-            (col("sa").cast("double") / col("na")).as("mean_a"),
-            (col("sb").cast("double") / col("nb")).as("mean_b"),
-            // n = 1 guard (r11 ADVICE): (s2 - s^2/1)/0 is NaN in Spark but
-            // engine-divergent in DuckDB — NULL the undefined variance
-            // explicitly on both engines (the n_lincoln m=0 fix pattern)
-            when(col("na") > 1,
-              (col("saa").cast("double") - col("sa").cast("double") * col("sa").cast("double")
-                / col("na")) / (col("na") - 1)).otherwise(lit(null)).as("var_a"),
-            when(col("nb") > 1,
-              (col("sbb").cast("double") - col("sb").cast("double") * col("sb").cast("double")
-                / col("nb")) / (col("nb") - 1)).otherwise(lit(null)).as("var_b"))
+        QueryUtil.urgentVsRestMoments(t(s, dir, "orders"))
           .select(col("na"), col("nb"),
             round((col("mean_a") - col("mean_b"))
               / sqrt(((col("na") - 1) * col("var_a") + (col("nb") - 1) * col("var_b"))
@@ -7208,25 +6969,7 @@ object AnalyticsQueries {
               * (lit(1.0) - lit(3.0) / (lit(4.0) * (col("na") + col("nb")) - 9)), 6)
               .as("hedges_g"))
       },
-      Some("""WITH agg AS (SELECT
-        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(o_totalprice AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END) AS sa,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(o_totalprice AS DECIMAL(19,6)) * CAST(o_totalprice AS DECIMAL(19,6))
-        |        ELSE CAST(0 AS DECIMAL(19,6)) * CAST(0 AS DECIMAL(19,6)) END) AS saa,
-        |    CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 0 ELSE 1 END) AS BIGINT) AS nb,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(0 AS DECIMAL(18,6)) ELSE CAST(o_totalprice AS DECIMAL(18,6)) END) AS sb,
-        |    sum(CASE WHEN o_orderpriority = '1-URGENT'
-        |        THEN CAST(0 AS DECIMAL(19,6)) * CAST(0 AS DECIMAL(19,6))
-        |        ELSE CAST(o_totalprice AS DECIMAL(19,6)) * CAST(o_totalprice AS DECIMAL(19,6)) END) AS sbb
-        |  FROM orders),
-        |m AS (SELECT na, nb,
-        |    CAST(sa AS DOUBLE) / na AS mean_a, CAST(sb AS DOUBLE) / nb AS mean_b,
-        |    CASE WHEN na > 1 THEN (CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1) END AS var_a,
-        |    CASE WHEN nb > 1 THEN (CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE) / nb) / (nb - 1) END AS var_b
-        |  FROM agg)
+      Some(s"""WITH ${OracleSql.urgentVsRestMoments}
         |SELECT na, nb,
         |  round((mean_a - mean_b)
         |    / sqrt(((na - 1) * var_a + (nb - 1) * var_b) / (na + nb - 2)), 6) AS cohens_d,
@@ -7360,11 +7103,7 @@ object AnalyticsQueries {
                 / (col("var_micro").cast("double") / 1e6), 6))
               .otherwise(lit(null).cast("double")).as("chi2_logrank"))
       },
-      Some("""WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d FROM orders),
-        |f AS (SELECT o_custkey, min(d) AS fd FROM o GROUP BY 1),
-        |s2 AS (SELECT o.o_custkey, min(d) AS sd
-        |  FROM o JOIN f ON o.o_custkey = f.o_custkey AND o.d > f.fd GROUP BY 1),
-        |mx AS (SELECT max(d) AS maxd FROM o),
+      Some(s"""WITH ${OracleSql.secondOrderGaps},
         |seg AS (SELECT c_custkey AS o_custkey,
         |    CAST(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS BIGINT) AS g1
         |  FROM customer),
@@ -7416,46 +7155,15 @@ object AnalyticsQueries {
     // calendar-bounded cumulative.
     "q_nelson_aalen" -> ((
       (s: SparkSession, dir: String) => {
-        val o = t(s, dir, "orders")
-          .select(col("o_custkey"), to_date(col("o_orderdate")).as("d"))
-        val f = o.groupBy("o_custkey").agg(min("d").as("fd"))
-        val s2 = o.join(f, Seq("o_custkey")).filter(col("d") > col("fd"))
-          .groupBy("o_custkey").agg(min("d").as("sd"))
-        val maxd = o.agg(max("d").as("maxd"))
-        val subj = f.join(s2, Seq("o_custkey"), "left").crossJoin(broadcast(maxd))
-          .select(
-            when(col("sd").isNotNull, datediff(col("sd"), col("fd")))
-              .otherwise(datediff(col("maxd"), col("fd"))).cast("long").as("t"),
-            col("sd").isNotNull.cast("long").as("ev"))
-        val byT = subj.groupBy("t").agg(count(lit(1)).as("a"), sum("ev").as("d_events"))
-        val nn = byT.agg(sum("a").as("nn"))
         val w = Window.orderBy("t")
-        byT.crossJoin(broadcast(nn))
-          .withColumn("cuma", sum("a").over(w))
-          .select(col("t"), col("d_events"),
-            (col("nn") - col("cuma") + col("a")).as("n_risk"))
-          .filter(col("d_events") > 0)
+        QueryUtil.secondOrderRiskSet(t(s, dir, "orders"))
           .withColumn("term",
             floor(lit(1e6) * col("d_events").cast("double") / col("n_risk")).cast("long"))
           .withColumn("cum_hazard_micro", sum("term").over(w))
           .select(col("t").as("t_days"), col("n_risk"), col("d_events"),
             col("cum_hazard_micro"))
       },
-      Some("""WITH o AS (SELECT o_custkey, CAST(o_orderdate AS DATE) AS d FROM orders),
-        |f AS (SELECT o_custkey, min(d) AS fd FROM o GROUP BY 1),
-        |s2 AS (SELECT o.o_custkey, min(d) AS sd
-        |  FROM o JOIN f ON o.o_custkey = f.o_custkey AND o.d > f.fd GROUP BY 1),
-        |mx AS (SELECT max(d) AS maxd FROM o),
-        |subj AS (SELECT
-        |    CAST(CASE WHEN s2.sd IS NOT NULL THEN date_diff('day', f.fd, s2.sd)
-        |         ELSE date_diff('day', f.fd, mx.maxd) END AS BIGINT) AS t,
-        |    CAST(CASE WHEN s2.sd IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS ev
-        |  FROM f LEFT JOIN s2 ON f.o_custkey = s2.o_custkey CROSS JOIN mx),
-        |byt AS (SELECT t, CAST(count(*) AS BIGINT) AS a,
-        |    CAST(sum(ev) AS BIGINT) AS d_events FROM subj GROUP BY 1),
-        |n AS (SELECT CAST(sum(a) AS BIGINT) AS nn FROM byt),
-        |risk AS (SELECT t, d_events,
-        |    nn - sum(a) OVER (ORDER BY t) + a AS n_risk FROM byt CROSS JOIN n),
+      Some(s"""WITH ${OracleSql.secondOrderRiskSet},
         |ev AS (SELECT t, n_risk, d_events,
         |    CAST(floor(1e6 * CAST(d_events AS DOUBLE) / n_risk) AS BIGINT) AS term
         |  FROM risk WHERE d_events > 0)
@@ -7477,19 +7185,7 @@ object AnalyticsQueries {
     // rank window partitions by block (bounded width k).
     "q_friedman" -> ((
       (s: SparkSession, dir: String) => {
-        val cells = t(s, dir, "orders")
-          .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("b"),
-            col("o_orderpriority").as("trt"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
-        val complete = cells.groupBy("b").agg(count(lit(1)).as("kk"))
-          .filter(col("kk") === 5).select("b")
-        val ranked = cells.join(complete, Seq("b"))
-          .withColumn("mr", rank().over(Window.partitionBy("b").orderBy("y")))
-          .withColumn("ties", count(lit(1)).over(Window.partitionBy("b", "y")))
-          .select(col("b"), col("trt"),
-            (lit(2) * col("mr") + col("ties") - 1).cast("long").as("r2"))
-        val rj = ranked.groupBy("trt")
-          .agg(sum("r2").as("rank2_sum"), count(lit(1)).as("n_blocks"))
+        val rj = QueryUtil.priorityRankSums(t(s, dir, "orders"))
         val stat = rj.agg(
             sum(col("rank2_sum").cast("decimal(19,0)") * col("rank2_sum").cast("decimal(19,0)"))
               .as("sr2"),
@@ -7505,16 +7201,7 @@ object AnalyticsQueries {
           .select(col("trt").as("o_orderpriority"), col("rank2_sum"),
             col("n_blocks"), col("chi2_milli"))
       },
-      Some("""WITH cells AS (SELECT
-        |    year(CAST(o_orderdate AS DATE)) * 12 + month(CAST(o_orderdate AS DATE)) AS b,
-        |    o_orderpriority AS trt,
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS y
-        |  FROM orders GROUP BY 1, 2),
-        |complete AS (SELECT b FROM cells GROUP BY b HAVING count(*) = 5),
-        |ranked AS (SELECT c.b, c.trt,
-        |    CAST(2 * rank() OVER (PARTITION BY c.b ORDER BY c.y)
-        |      + count(*) OVER (PARTITION BY c.b, c.y) - 1 AS BIGINT) AS r2
-        |  FROM cells c JOIN complete USING (b)),
+      Some(s"""WITH ${OracleSql.priorityBlockRanks},
         |rj AS (SELECT trt, CAST(sum(r2) AS BIGINT) AS rank2_sum,
         |    CAST(count(*) AS BIGINT) AS n_blocks FROM ranked GROUP BY 1),
         |stat AS (SELECT CAST(floor(1000.0
@@ -7771,19 +7458,7 @@ object AnalyticsQueries {
     // integer rank sums, rounded to 6.
     "q_page_trend" -> ((
       (s: SparkSession, dir: String) => {
-        val cells = t(s, dir, "orders")
-          .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("b"),
-            col("o_orderpriority").as("trt"))
-          .agg(moneySum(col("o_totalprice")).as("y"))
-        val complete = cells.groupBy("b").agg(count(lit(1)).as("kk"))
-          .filter(col("kk") === 5).select("b")
-        val ranked = cells.join(complete, Seq("b"))
-          .withColumn("mr", rank().over(Window.partitionBy("b").orderBy("y")))
-          .withColumn("ties", count(lit(1)).over(Window.partitionBy("b", "y")))
-          .select(col("b"), col("trt"),
-            (lit(2) * col("mr") + col("ties") - 1).cast("long").as("r2"))
-        val rj = ranked.groupBy("trt")
-          .agg(sum("r2").as("rank2_sum"), count(lit(1)).as("n_blocks"))
+        val rj = QueryUtil.priorityRankSums(t(s, dir, "orders"))
           // urgency rank from the priority name's leading digit
           .withColumn("j", substring(col("trt"), 1, 1).cast("long"))
         rj.agg(sum(col("j") * col("rank2_sum")).as("l2"),
@@ -7796,16 +7471,7 @@ object AnalyticsQueries {
                 * (col("k") + 1) * (col("k") + 1) * (col("k") - 1) / lit(144.0)), 6)
               .as("z_page"))
       },
-      Some("""WITH cells AS (SELECT
-        |    year(CAST(o_orderdate AS DATE)) * 12 + month(CAST(o_orderdate AS DATE)) AS b,
-        |    o_orderpriority AS trt,
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE) AS y
-        |  FROM orders GROUP BY 1, 2),
-        |complete AS (SELECT b FROM cells GROUP BY b HAVING count(*) = 5),
-        |ranked AS (SELECT c.b, c.trt,
-        |    CAST(2 * rank() OVER (PARTITION BY c.b ORDER BY c.y)
-        |      + count(*) OVER (PARTITION BY c.b, c.y) - 1 AS BIGINT) AS r2
-        |  FROM cells c JOIN complete USING (b)),
+      Some(s"""WITH ${OracleSql.priorityBlockRanks},
         |rj AS (SELECT trt, CAST(sum(r2) AS BIGINT) AS rank2_sum,
         |    CAST(count(*) AS BIGINT) AS n_blocks,
         |    CAST(substr(trt, 1, 1) AS BIGINT) AS j FROM ranked GROUP BY 1)

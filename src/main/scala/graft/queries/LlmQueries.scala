@@ -38,10 +38,7 @@ object LlmQueries {
     * proven green by dedup_minhash_lsh), so the same fixpoint applies.
     */
   private val ccOracleSql =
-    """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-      |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-      |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
+    s"""WITH RECURSIVE ${OracleSql.shingleCounts},
       |rawpairs AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -268,14 +265,7 @@ object LlmQueries {
     "dedup_ngram_jaccard" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      Some(s"""WITH ${OracleSql.shinglePairs("pairs")}
         |SELECT doc_a, doc_b, common, ca.n_sh AS n_sh_a, cb.n_sh AS n_sh_b
         |FROM pairs p JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
         |WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)""".stripMargin)
@@ -290,14 +280,7 @@ object LlmQueries {
             Dedup.ngramJaccardPairs(d, n = 3, pct = 80, maxDf = 0))
           .select(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.shinglePairs("pairs")},
         |dups AS (
         |  SELECT DISTINCT doc_b FROM pairs p
         |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
@@ -373,10 +356,7 @@ object LlmQueries {
               col("n_pairs"), col("n_docs_dropped"))
         }.reduce(_ unionAll _)
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
+      Some(s"""WITH ${OracleSql.shingleCounts},
         |rawpairs AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -537,14 +517,7 @@ object LlmQueries {
         Dedup.dropNearDuplicates(d, Dedup.minhashLshPairs(d))
           .select(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.shinglePairs("pairs")},
         |dups AS (
         |  SELECT DISTINCT doc_b FROM pairs p
         |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
@@ -561,14 +534,7 @@ object LlmQueries {
     // dedup_ngram_jaccard (floor(x) >= k ⟺ x >= k for integer k).
     "dedup_minhash_lsh" -> ((
       (s: SparkSession, dir: String) => Dedup.minhashLshPairs(docs(s, dir)),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      Some(s"""WITH ${OracleSql.shinglePairs("pairs")}
         |SELECT doc_a, doc_b,
         |  common * 1000 // (ca.n_sh + cb.n_sh - common) AS jaccard_x1000
         |FROM pairs p JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
@@ -683,14 +649,7 @@ object LlmQueries {
           .select(lit("err_band_violations").as("metric"), col("value").cast("long").as("value"))
         n.unionAll(viol)
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.shinglePairs("pairs")},
         |jp AS (SELECT doc_a FROM pairs p
         |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
         |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common))
@@ -1505,34 +1464,7 @@ object LlmQueries {
     // exactly in SQL.
     "q_hard_negatives" -> ((
       (s: SparkSession, dir: String) => {
-        val toks = docs(s, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-          .filter(length(col("tok")) > 0)
-        // dl = Σ tf per doc folds from the cached tf instead of a second
-        // pass over the exploded tokens (r16, guide §2.3); toks becomes
-        // single-reader so its persist (and eager fill job) goes away
-        val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-          .eagerPersisted
-        val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("sdl"))
-        val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(stats))
-          .select(col("tok"),
-            log((col("n").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-              .as("idf"),
-            (col("sdl").cast("double") / col("n")).as("avgdl"))
-        val qterms = tf.filter(pmod(col("doc_id"), lit(100)) === 0)
-          .select(col("doc_id").as("query_id"), col("tok")).distinct()
-        val lex = qterms.join(tf, "tok")
-          .filter(col("doc_id") =!= col("query_id"))
-          // no idf hint: idf is VOCABULARY-sized (grows with the corpus);
-          // AQE broadcasts it while it fits, shuffles when it does not
-          .join(idf, "tok").join(dl, "doc_id")
-          .select(col("query_id"), col("doc_id"),
-            floor(lit(1e6) * col("idf") * (col("tf") * lit(2.2))
-              / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-              .cast("long").as("tm"))
-          .groupBy("query_id", "doc_id").agg(sum("tm").as("lex"))
+        val lex = QueryUtil.bm25QueryScores(docs(s, dir), "lex")
         val wl = Window.partitionBy("query_id").orderBy(col("lex").desc, col("doc_id"))
         val lexTop = lex.withColumn("lex_rank", row_number().over(wl))
           .filter(col("lex_rank") <= 10)
@@ -1549,23 +1481,7 @@ object LlmQueries {
             col("lex_rank").cast("long").as("lex_rank"),
             col("hn_rank").cast("long").as("hn_rank"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |t AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-        |stats AS (SELECT count(*) AS n, sum(dl) AS sdl FROM dl),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY 1, 2),
-        |idf AS (SELECT tok,
-        |    ln((CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5)) AS idf,
-        |    CAST(sdl AS DOUBLE) / n AS avgdl
-        |  FROM (SELECT tok, count(*) AS df FROM tf GROUP BY 1), stats),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, tok FROM tf WHERE doc_id % 100 = 0),
-        |ls AS (SELECT qt.query_id, tf.doc_id,
-        |    CAST(floor(1e6 * idf * (tf * 2.2)
-        |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))) AS BIGINT) AS tm
-        |  FROM qt JOIN tf USING (tok) JOIN idf USING (tok)
-        |  JOIN dl ON dl.doc_id = tf.doc_id
-        |  WHERE tf.doc_id <> qt.query_id),
-        |lex AS (SELECT query_id, doc_id, CAST(sum(tm) AS BIGINT) AS lex FROM ls GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.bm25Lex("lex")},
         |lt AS (SELECT query_id, doc_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY lex DESC, doc_id) AS lex_rank
         |  FROM lex QUALIFY lex_rank <= 10),
@@ -1734,34 +1650,7 @@ object LlmQueries {
     // (query, doc) — nothing global.
     "ann_hybrid_bm25" -> ((
       (s: SparkSession, dir: String) => {
-        val toks = docs(s, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-          .filter(length(col("tok")) > 0)
-        // dl = Σ tf per doc folds from the cached tf instead of a second
-        // pass over the exploded tokens (r16, guide §2.3); toks becomes
-        // single-reader so its persist (and eager fill job) goes away
-        val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-          .eagerPersisted
-        val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("sdl"))
-        val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(stats))
-          .select(col("tok"),
-            log((col("n").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-              .as("idf"),
-            (col("sdl").cast("double") / col("n")).as("avgdl"))
-        val qterms = tf.filter(pmod(col("doc_id"), lit(100)) === 0)
-          .select(col("doc_id").as("query_id"), col("tok")).distinct()
-        val lex = qterms.join(tf, "tok")
-          .filter(col("doc_id") =!= col("query_id"))
-          // no idf hint: idf is VOCABULARY-sized (grows with the corpus);
-          // AQE broadcasts it while it fits, shuffles when it does not
-          .join(idf, "tok").join(dl, "doc_id")
-          .select(col("query_id"), col("doc_id"),
-            floor(lit(1e6) * col("idf") * (col("tf") * lit(2.2))
-              / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-              .cast("long").as("tm"))
-          .groupBy("query_id", "doc_id").agg(sum("tm").as("lex"))
+        val lex = QueryUtil.bm25QueryScores(docs(s, dir), "lex")
         val wl = Window.partitionBy("query_id").orderBy(col("lex").desc, col("doc_id"))
         val lexTop = lex.withColumn("r", row_number().over(wl))
           .filter(col("r") <= 10)
@@ -1781,23 +1670,7 @@ object LlmQueries {
           .select(col("query_id"), col("doc_id"),
             col("rnk").cast("long").as("rnk"), col("rrf"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |t AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-        |stats AS (SELECT count(*) AS n, sum(dl) AS sdl FROM dl),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY 1, 2),
-        |idf AS (SELECT tok,
-        |    ln((CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5)) AS idf,
-        |    CAST(sdl AS DOUBLE) / n AS avgdl
-        |  FROM (SELECT tok, count(*) AS df FROM tf GROUP BY 1), stats),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, tok FROM tf WHERE doc_id % 100 = 0),
-        |ls AS (SELECT qt.query_id, tf.doc_id,
-        |    CAST(floor(1e6 * idf * (tf * 2.2)
-        |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))) AS BIGINT) AS tm
-        |  FROM qt JOIN tf USING (tok) JOIN idf USING (tok)
-        |  JOIN dl ON dl.doc_id = tf.doc_id
-        |  WHERE tf.doc_id <> qt.query_id),
-        |lex AS (SELECT query_id, doc_id, CAST(sum(tm) AS BIGINT) AS lex FROM ls GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.bm25Lex("lex")},
         |lt AS (SELECT query_id, doc_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY lex DESC, doc_id) AS r
         |  FROM lex QUALIFY r <= 10),
@@ -1832,27 +1705,15 @@ object LlmQueries {
         val e = emb(s, dir)
         val queries = e.filter(col("vec_id") < 8).limit(8)
         val lsh = Similarity.lshTopK(e, queries, dim = 64, k = 5)
-        val truth = Similarity.bruteForceTopK(e, queries, k = 20)
-          .select(col("query_id"), col("neighbor_id"))
-        val answered = lsh
-          .agg(countDistinct(col("query_id")).as("value"))
-          .select(lit("queries_answered").as("metric"), col("value").cast("long").as("value"))
-        val offRanking = lsh.join(truth, Seq("query_id", "neighbor_id"), "left_anti")
-          .agg(count(lit(1)).as("off"))
-          .crossJoin(lsh.agg(count(lit(1)).as("total")))
-          .select(lit("off_top20_within_tolerance").as("metric"),
-            (col("off") * 5 <= col("total")).cast("long").as("value"))
         val selectivity = Similarity.lshCandidates(e, queries, dim = 64)
           .agg(count(lit(1)).as("cand"))
           .crossJoin(e.agg(count(lit(1)).as("n")))
           .crossJoin(queries.agg(count(lit(1)).as("q")))
           .select(lit("candidate_fraction_below_half").as("metric"),
             (col("cand") * 2 < col("n") * col("q")).cast("long").as("value"))
-        answered.unionAll(offRanking).unionAll(selectivity)
+        QueryUtil.annToleranceRows(lsh, e, queries).unionAll(selectivity)
       },
-      Some("""SELECT 'queries_answered' AS metric,
-        |  CAST(count(DISTINCT vec_id) AS BIGINT) AS value FROM embeddings WHERE vec_id < 8
-        |UNION ALL SELECT 'off_top20_within_tolerance', CAST(1 AS BIGINT)
+      Some(s"""${OracleSql.annTolerance}
         |UNION ALL SELECT 'candidate_fraction_below_half', CAST(1 AS BIGINT)""".stripMargin)
     )),
 
@@ -1898,21 +1759,9 @@ object LlmQueries {
         val e = emb(s, dir)
         val queries = e.filter(col("vec_id") < 8).limit(8)
         val qz = Similarity.quantizedTopK(e, queries, k = 5)
-        val truth = Similarity.bruteForceTopK(e, queries, k = 20)
-          .select(col("query_id"), col("neighbor_id"))
-        val answered = qz
-          .agg(countDistinct(col("query_id")).as("value"))
-          .select(lit("queries_answered").as("metric"), col("value").cast("long").as("value"))
-        val offRanking = qz.join(truth, Seq("query_id", "neighbor_id"), "left_anti")
-          .agg(count(lit(1)).as("off"))
-          .crossJoin(qz.agg(count(lit(1)).as("total")))
-          .select(lit("off_top20_within_tolerance").as("metric"),
-            (col("off") * 5 <= col("total")).cast("long").as("value"))
-        answered.unionAll(offRanking)
+        QueryUtil.annToleranceRows(qz, e, queries)
       },
-      Some("""SELECT 'queries_answered' AS metric,
-        |  CAST(count(DISTINCT vec_id) AS BIGINT) AS value FROM embeddings WHERE vec_id < 8
-        |UNION ALL SELECT 'off_top20_within_tolerance', CAST(1 AS BIGINT)""".stripMargin)
+      Some(OracleSql.annTolerance)
     )),
 
     // IVF × quantized scoring (the FAISS IVF-ADC shape): cells bound WHICH
@@ -1924,21 +1773,9 @@ object LlmQueries {
         val e = emb(s, dir)
         val queries = e.filter(col("vec_id") < 8).limit(8)
         val ivfq = Similarity.ivfQuantizedTopK(e, queries, k = 5)
-        val truth = Similarity.bruteForceTopK(e, queries, k = 20)
-          .select(col("query_id"), col("neighbor_id"))
-        val answered = ivfq
-          .agg(countDistinct(col("query_id")).as("value"))
-          .select(lit("queries_answered").as("metric"), col("value").cast("long").as("value"))
-        val offRanking = ivfq.join(truth, Seq("query_id", "neighbor_id"), "left_anti")
-          .agg(count(lit(1)).as("off"))
-          .crossJoin(ivfq.agg(count(lit(1)).as("total")))
-          .select(lit("off_top20_within_tolerance").as("metric"),
-            (col("off") * 5 <= col("total")).cast("long").as("value"))
-        answered.unionAll(offRanking)
+        QueryUtil.annToleranceRows(ivfq, e, queries)
       },
-      Some("""SELECT 'queries_answered' AS metric,
-        |  CAST(count(DISTINCT vec_id) AS BIGINT) AS value FROM embeddings WHERE vec_id < 8
-        |UNION ALL SELECT 'off_top20_within_tolerance', CAST(1 AS BIGINT)""".stripMargin)
+      Some(OracleSql.annTolerance)
     )),
 
     // IVF ANN over KMeans cells — same self-verifying contract as
@@ -1949,21 +1786,9 @@ object LlmQueries {
         val e = emb(s, dir)
         val queries = e.filter(col("vec_id") < 8).limit(8)
         val ivf = Similarity.ivfTopK(e, queries, k = 5)
-        val truth = Similarity.bruteForceTopK(e, queries, k = 20)
-          .select(col("query_id"), col("neighbor_id"))
-        val answered = ivf
-          .agg(countDistinct(col("query_id")).as("value"))
-          .select(lit("queries_answered").as("metric"), col("value").cast("long").as("value"))
-        val offRanking = ivf.join(truth, Seq("query_id", "neighbor_id"), "left_anti")
-          .agg(count(lit(1)).as("off"))
-          .crossJoin(ivf.agg(count(lit(1)).as("total")))
-          .select(lit("off_top20_within_tolerance").as("metric"),
-            (col("off") * 5 <= col("total")).cast("long").as("value"))
-        answered.unionAll(offRanking)
+        QueryUtil.annToleranceRows(ivf, e, queries)
       },
-      Some("""SELECT 'queries_answered' AS metric,
-        |  CAST(count(DISTINCT vec_id) AS BIGINT) AS value FROM embeddings WHERE vec_id < 8
-        |UNION ALL SELECT 'off_top20_within_tolerance', CAST(1 AS BIGINT)""".stripMargin)
+      Some(OracleSql.annTolerance)
     )),
 
     "text_token_stats" -> ((
@@ -2227,20 +2052,7 @@ object LlmQueries {
     "text_shared_spans" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.sharedSpans(docs(s, dir), n = 8, maxDf = 50),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i FROM toks WHERE len(t) >= 8),
-        |sp AS (SELECT doc_id, i, array_to_string(list_transform(t[CAST(i AS INT):CAST(i+7 AS INT)], x -> CAST(len(x) AS VARCHAR) || ':' || x), '') AS s FROM u),
-        |heavy AS (SELECT s FROM sp GROUP BY s HAVING count(DISTINCT doc_id) > 50),
-        |pruned AS (SELECT * FROM sp WHERE s NOT IN (SELECT s FROM heavy)),
-        |m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |        a.i - 1 AS pa, b.i - 1 AS pb
-        |      FROM pruned a JOIN pruned b ON a.s = b.s AND a.doc_id < b.doc_id),
-        |runs AS (SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
-        |        pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb ORDER BY pa) AS isl
-        |      FROM m),
-        |isla AS (SELECT doc_a, doc_b, diag, isl, count(*) AS run_len,
-        |        min(pa) AS sa, min(pb) AS sb
-        |      FROM runs GROUP BY 1, 2, 3, 4),
+      Some(s"""WITH ${OracleSql.sharedSpanRuns},
         |ranked AS (SELECT doc_a, doc_b, run_len, sa, sb,
         |        row_number() OVER (PARTITION BY doc_a, doc_b
         |          ORDER BY run_len DESC, sa, sb) AS rn,
@@ -2327,20 +2139,7 @@ object LlmQueries {
               slice(col("t"), (col("start_b") + col("span_tokens") + 1).cast("int"),
                 size(col("t")))), " ").as("scrubbed_text"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i FROM toks WHERE len(t) >= 8),
-        |sp AS (SELECT doc_id, i, array_to_string(list_transform(t[CAST(i AS INT):CAST(i+7 AS INT)], x -> CAST(len(x) AS VARCHAR) || ':' || x), '') AS s FROM u),
-        |heavy AS (SELECT s FROM sp GROUP BY s HAVING count(DISTINCT doc_id) > 50),
-        |pruned AS (SELECT * FROM sp WHERE s NOT IN (SELECT s FROM heavy)),
-        |m AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |        a.i - 1 AS pa, b.i - 1 AS pb
-        |      FROM pruned a JOIN pruned b ON a.s = b.s AND a.doc_id < b.doc_id),
-        |runs AS (SELECT doc_a, doc_b, pa, pb, pa - pb AS diag,
-        |        pa - row_number() OVER (PARTITION BY doc_a, doc_b, pa - pb ORDER BY pa) AS isl
-        |      FROM m),
-        |isla AS (SELECT doc_a, doc_b, diag, isl, count(*) AS run_len,
-        |        min(pa) AS sa, min(pb) AS sb
-        |      FROM runs GROUP BY 1, 2, 3, 4),
+      Some(s"""WITH ${OracleSql.sharedSpanRuns},
         |pair_best AS (SELECT doc_a, doc_b, run_len + 7 AS span_tokens, sa, sb,
         |        row_number() OVER (PARTITION BY doc_a, doc_b
         |          ORDER BY run_len DESC, sa, sb) AS rn
@@ -2554,10 +2353,7 @@ object LlmQueries {
             d.filter(col("doc_id") % 10 =!= 0), d.filter(col("doc_id") % 10 === 0))
           .select(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
+      Some(s"""WITH ${OracleSql.shingleCounts},
         |pairs AS (
         |  SELECT b.doc_id AS batch_id, c.doc_id AS corpus_id, CAST(count(*) AS BIGINT) AS common
         |  FROM sh b JOIN sh c ON b.s = c.s AND b.doc_id % 10 = 0 AND c.doc_id % 10 != 0
@@ -2596,17 +2392,7 @@ object LlmQueries {
           .select(col("doc_id").as("doc_a"), col("cluster_id").as("doc_b"))
         Dedup.connectedComponents(labelEdges.unionAll(newPairs))
       },
-      Some("""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
+      Some(s"""WITH RECURSIVE ${OracleSql.jaccardPairs},
         |edges AS (SELECT doc_a AS a, doc_b AS b FROM jp UNION SELECT doc_b, doc_a FROM jp),
         |reach AS (
         |  SELECT a AS node, b AS r FROM edges
@@ -2832,21 +2618,7 @@ object LlmQueries {
     "vector_kmeans_lloyd" -> ((
       (s: SparkSession, dir: String) =>
         Similarity.lloydKMeansQ(emb(s, dir), k = 8, iters = 2),
-      Some("""WITH e AS (SELECT vec_id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |u AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-        |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-        |c0 AS (SELECT vec_id AS cl, idx, qv AS cv FROM u
-        |       WHERE vec_id IN (SELECT DISTINCT vec_id FROM u ORDER BY vec_id LIMIT 8)),
-        |s0 AS (SELECT u.vec_id, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
-        |       FROM u JOIN c0 c USING (idx) GROUP BY 1, 2),
-        |a0 AS (SELECT vec_id, cl FROM (SELECT vec_id, cl,
-        |         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rn FROM s0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.cl, u.idx,
-        |         CAST(floor(CAST(sum(u.qv) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-        |       FROM u JOIN a0 a USING (vec_id) GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.lloydFirstRound},
         |s1 AS (SELECT u.vec_id, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
         |       FROM u JOIN c1 c USING (idx) GROUP BY 1, 2),
         |a1 AS (SELECT vec_id, cl FROM (SELECT vec_id, cl,
@@ -2872,32 +2644,9 @@ object LlmQueries {
     "vector_pca_power" -> ((
       (s: SparkSession, dir: String) =>
         Similarity.pcaPowerQ(emb(s, dir), iters = 3),
-      Some {
-        val rounds = (1 to 3).map { t =>
-          s"""w$t AS (SELECT cov.i AS j, CAST(sum(cov.cv * v${t - 1}.v) AS BIGINT) AS w
-             |  FROM cov JOIN v${t - 1} ON v${t - 1}.j = cov.j GROUP BY 1),
-             |m$t AS (SELECT greatest(max(abs(w)) // 10000, 1) AS m FROM w$t),
-             |v$t AS (SELECT j, CAST(CASE WHEN w < 0 THEN -(abs(w) // m)
-             |  ELSE abs(w) // m END AS BIGINT) AS v FROM w$t, m$t)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH e AS (SELECT vec_id,
-           |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-           |  FROM embeddings),
-           |u AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-           |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-           |mu AS (SELECT idx, CAST(floor(CAST(sum(qv) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-           |       FROM u GROUP BY 1),
-           |c AS (SELECT vec_id, idx, qv - mu AS cv FROM u JOIN mu USING (idx)),
-           |cov AS (SELECT i, j, CAST(CASE WHEN s < 0 THEN -(abs(s) // nn)
-           |          ELSE abs(s) // nn END AS BIGINT) AS cv
-           |        FROM (SELECT a.idx AS i, b.idx AS j,
-           |                CAST(sum(a.cv * b.cv) AS BIGINT) AS s
-           |              FROM c a JOIN c b USING (vec_id) GROUP BY 1, 2),
-           |             (SELECT count(*) AS nn FROM embeddings)),
-           |v0 AS (SELECT DISTINCT idx AS j, CAST(10000 AS BIGINT) AS v FROM u),
-           |$rounds
-           |SELECT j AS dim_idx, v AS weight FROM v3""".stripMargin
-      }
+      Some(s"""WITH ${OracleSql.powerIterationStart},
+        |${OracleSql.powerRounds(3)}
+        |SELECT j AS dim_idx, v AS weight FROM v3""".stripMargin)
     )),
 
     // Top-2 principal directions (Similarity.pca2PowerQ): the dominant
@@ -2952,39 +2701,16 @@ object LlmQueries {
     "vector_abtt_whiten" -> ((
       (s: SparkSession, dir: String) =>
         Similarity.abttWhitenQ(emb(s, dir), idPred = col("vec_id") < 8, iters = 3),
-      Some {
-        val rounds = (1 to 3).map { t =>
-          s"""w$t AS (SELECT cov.i AS j, CAST(sum(cov.cv * v${t - 1}.v) AS BIGINT) AS w
-             |  FROM cov JOIN v${t - 1} ON v${t - 1}.j = cov.j GROUP BY 1),
-             |m$t AS (SELECT greatest(max(abs(w)) // 10000, 1) AS m FROM w$t),
-             |v$t AS (SELECT j, CAST(CASE WHEN w < 0 THEN -(abs(w) // m)
-             |  ELSE abs(w) // m END AS BIGINT) AS v FROM w$t, m$t)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH e AS (SELECT vec_id,
-           |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-           |  FROM embeddings),
-           |u AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-           |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-           |mu AS (SELECT idx, CAST(floor(CAST(sum(qv) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-           |       FROM u GROUP BY 1),
-           |c AS (SELECT vec_id, idx, qv - mu AS cv FROM u JOIN mu USING (idx)),
-           |cov AS (SELECT i, j, CAST(CASE WHEN s < 0 THEN -(abs(s) // nn)
-           |          ELSE abs(s) // nn END AS BIGINT) AS cv
-           |        FROM (SELECT a.idx AS i, b.idx AS j,
-           |                CAST(sum(a.cv * b.cv) AS BIGINT) AS s
-           |              FROM c a JOIN c b USING (vec_id) GROUP BY 1, 2),
-           |             (SELECT count(*) AS nn FROM embeddings)),
-           |v0 AS (SELECT DISTINCT idx AS j, CAST(10000 AS BIGINT) AS v FROM u),
-           |$rounds,
-           |uu AS (SELECT sum(v * v) AS uu FROM v3),
-           |dots AS (SELECT vec_id, sum(u.qv * v3.v) AS dot
-           |  FROM u JOIN v3 ON v3.j = u.idx WHERE vec_id < 8 GROUP BY 1)
-           |SELECT u.vec_id, u.idx AS dim_idx,
-           |  CAST(u.qv - CASE WHEN d.dot * v3.v < 0 THEN -(abs(d.dot * v3.v) // uu)
-           |    ELSE abs(d.dot * v3.v) // uu END AS BIGINT) AS whitened
-           |FROM u JOIN v3 ON v3.j = u.idx JOIN dots d ON d.vec_id = u.vec_id, uu
-           |WHERE u.vec_id < 8""".stripMargin
-      }
+      Some(s"""WITH ${OracleSql.powerIterationStart},
+        |${OracleSql.powerRounds(3)},
+        |uu AS (SELECT sum(v * v) AS uu FROM v3),
+        |dots AS (SELECT vec_id, sum(u.qv * v3.v) AS dot
+        |  FROM u JOIN v3 ON v3.j = u.idx WHERE vec_id < 8 GROUP BY 1)
+        |SELECT u.vec_id, u.idx AS dim_idx,
+        |  CAST(u.qv - CASE WHEN d.dot * v3.v < 0 THEN -(abs(d.dot * v3.v) // uu)
+        |    ELSE abs(d.dot * v3.v) // uu END AS BIGINT) AS whitened
+        |FROM u JOIN v3 ON v3.j = u.idx JOIN dots d ON d.vec_id = u.vec_id, uu
+        |WHERE u.vec_id < 8""".stripMargin)
     )),
 
     // PQ codebook training: the exact Lloyd tier run independently in 4
@@ -2995,22 +2721,7 @@ object LlmQueries {
     "vector_pq_train" -> ((
       (s: SparkSession, dir: String) =>
         Similarity.pqTrainQ(emb(s, dir), nSub = 4, subDim = 16, k = 4, iters = 1),
-      Some("""WITH e AS (SELECT vec_id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |u AS (SELECT vec_id, CAST((i - 1) // 16 AS BIGINT) AS sub,
-        |        CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-        |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-        |c0 AS (SELECT vec_id AS cl, sub, idx, qv AS cv FROM u
-        |       WHERE vec_id IN (SELECT DISTINCT vec_id FROM u ORDER BY vec_id LIMIT 4)),
-        |s0 AS (SELECT u.vec_id, u.sub, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
-        |       FROM u JOIN c0 c ON c.sub = u.sub AND c.idx = u.idx GROUP BY 1, 2, 3),
-        |a0 AS (SELECT vec_id, sub, cl FROM (SELECT vec_id, sub, cl,
-        |         row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, cl) AS rn FROM s0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.cl, u.sub, u.idx,
-        |         CAST(floor(CAST(sum(u.qv) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-        |       FROM u JOIN a0 a ON a.vec_id = u.vec_id AND a.sub = u.sub GROUP BY 1, 2, 3),
+      Some(s"""WITH ${OracleSql.pqFirstRound},
         |s1 AS (SELECT u.vec_id, u.sub, c.cl,
         |         CAST(sum((u.qv - c.cv) * (u.qv - c.cv)) AS BIGINT) AS d2
         |       FROM u JOIN c1 c ON c.sub = u.sub AND c.idx = u.idx GROUP BY 1, 2, 3)
@@ -3031,22 +2742,7 @@ object LlmQueries {
         Similarity.pqAdcTopK(e, e.filter(col("vec_id") < 8).limit(8), k = 5, nSub = 4,
           subDim = 16, kCodes = 4, iters = 1)
       },
-      Some("""WITH e AS (SELECT vec_id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |u AS (SELECT vec_id, CAST((i - 1) // 16 AS BIGINT) AS sub,
-        |        CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-        |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-        |c0 AS (SELECT vec_id AS cl, sub, idx, qv AS cv FROM u
-        |       WHERE vec_id IN (SELECT DISTINCT vec_id FROM u ORDER BY vec_id LIMIT 4)),
-        |s0 AS (SELECT u.vec_id, u.sub, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
-        |       FROM u JOIN c0 c ON c.sub = u.sub AND c.idx = u.idx GROUP BY 1, 2, 3),
-        |a0 AS (SELECT vec_id, sub, cl FROM (SELECT vec_id, sub, cl,
-        |         row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, cl) AS rn FROM s0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.cl, u.sub, u.idx,
-        |         CAST(floor(CAST(sum(u.qv) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-        |       FROM u JOIN a0 a ON a.vec_id = u.vec_id AND a.sub = u.sub GROUP BY 1, 2, 3),
+      Some(s"""WITH ${OracleSql.pqFirstRound},
         |s1 AS (SELECT u.vec_id, u.sub, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
         |       FROM u JOIN c1 c ON c.sub = u.sub AND c.idx = u.idx GROUP BY 1, 2, 3),
         |codes AS (SELECT vec_id, sub, cl FROM (SELECT vec_id, sub, cl,
@@ -3074,21 +2770,7 @@ object LlmQueries {
     "vector_rvq" -> ((
       (s: SparkSession, dir: String) =>
         Similarity.residualQuantizeQ(emb(s, dir), k1 = 8, k2 = 4),
-      Some("""WITH e AS (SELECT vec_id,
-        |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |u AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-        |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-        |c0 AS (SELECT vec_id AS cl, idx, qv AS cv FROM u
-        |       WHERE vec_id IN (SELECT DISTINCT vec_id FROM u ORDER BY vec_id LIMIT 8)),
-        |s0 AS (SELECT u.vec_id, c.cl, sum((u.qv - c.cv) * (u.qv - c.cv)) AS d2
-        |       FROM u JOIN c0 c USING (idx) GROUP BY 1, 2),
-        |a0 AS (SELECT vec_id, cl FROM (SELECT vec_id, cl,
-        |         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rn FROM s0)
-        |       WHERE rn = 1),
-        |c1 AS (SELECT a.cl, u.idx,
-        |         CAST(floor(CAST(sum(u.qv) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-        |       FROM u JOIN a0 a USING (vec_id) GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.lloydFirstRound},
         |s1 AS (SELECT u.vec_id, c.cl, CAST(sum((u.qv - c.cv) * (u.qv - c.cv)) AS BIGINT) AS d2
         |       FROM u JOIN c1 c USING (idx) GROUP BY 1, 2),
         |a1 AS (SELECT vec_id, cl, d2 FROM (SELECT vec_id, cl, d2,
@@ -3476,21 +3158,7 @@ object LlmQueries {
     // DuckDB-expressible — and is covered by DedupSpec order-sensitivity.)
     "text_langid" -> ((
       (s: SparkSession, dir: String) => TextAnalysis.languageId(docs(s, dir)),
-      Some("""WITH s AS (SELECT doc_id, lang AS labeled_lang, lower(text) AS t FROM documents),
-        |sc AS (SELECT doc_id, labeled_lang,
-        |  (CASE WHEN t LIKE '%ei%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%ch%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%en%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%un%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%sch%' THEN 1 ELSE 0 END) AS s_de,
-        |  (CASE WHEN t LIKE '%th%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%he%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%in%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%er%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%an%' THEN 1 ELSE 0 END) AS s_en,
-        |  (CASE WHEN t LIKE '%de%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%la%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%os%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%el%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%ar%' THEN 1 ELSE 0 END) AS s_es,
-        |  (CASE WHEN t LIKE '%zh%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%sh%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%ng%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%xi%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%qi%' THEN 1 ELSE 0 END) AS s_zh
-        |FROM s)
+      Some(s"""WITH ${OracleSql.langidScores}
         |SELECT doc_id,
         |  CASE WHEN s_zh >= s_es AND s_zh >= s_en AND s_zh >= s_de THEN 'zh'
         |       WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
@@ -3511,21 +3179,7 @@ object LlmQueries {
         TextAnalysis.languageId(docs(s, dir))
           .groupBy("labeled_lang", "predicted_lang")
           .agg(count(lit(1)).as("cnt")),
-      Some("""WITH s AS (SELECT doc_id, lang AS labeled_lang, lower(text) AS t FROM documents),
-        |sc AS (SELECT doc_id, labeled_lang,
-        |  (CASE WHEN t LIKE '%ei%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%ch%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%en%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%un%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%sch%' THEN 1 ELSE 0 END) AS s_de,
-        |  (CASE WHEN t LIKE '%th%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%he%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%in%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%er%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%an%' THEN 1 ELSE 0 END) AS s_en,
-        |  (CASE WHEN t LIKE '%de%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%la%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%os%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%el%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%ar%' THEN 1 ELSE 0 END) AS s_es,
-        |  (CASE WHEN t LIKE '%zh%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%sh%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%ng%' THEN 1 ELSE 0 END + CASE WHEN t LIKE '%xi%' THEN 1 ELSE 0 END
-        |   + CASE WHEN t LIKE '%qi%' THEN 1 ELSE 0 END) AS s_zh
-        |FROM s),
+      Some(s"""WITH ${OracleSql.langidScores},
         |p AS (SELECT labeled_lang,
         |  CASE WHEN s_zh >= s_es AND s_zh >= s_en AND s_zh >= s_de THEN 'zh'
         |       WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
@@ -3808,16 +3462,7 @@ object LlmQueries {
         Imaging.imagePHashes(docs(s, dir).select(col("doc_id")).as[Long]).toDF()
       },
       Some(dhashOracleCte +
-        """,kt AS (SELECT * FROM (VALUES
-          |  (0,0,10000), (0,1,10000), (0,2,10000), (0,3,10000), (0,4,10000), (0,5,10000), (0,6,10000), (0,7,10000),
-          |  (1,0,9808), (1,1,8315), (1,2,5556), (1,3,1951), (1,4,-1951), (1,5,-5556), (1,6,-8315), (1,7,-9808),
-          |  (2,0,9239), (2,1,3827), (2,2,-3827), (2,3,-9239), (2,4,-9239), (2,5,-3827), (2,6,3827), (2,7,9239),
-          |  (3,0,8315), (3,1,-1951), (3,2,-9808), (3,3,-5556), (3,4,5556), (3,5,9808), (3,6,1951), (3,7,-8315),
-          |  (4,0,7071), (4,1,-7071), (4,2,-7071), (4,3,7071), (4,4,7071), (4,5,-7071), (4,6,-7071), (4,7,7071),
-          |  (5,0,5556), (5,1,-9808), (5,2,1951), (5,3,8315), (5,4,-8315), (5,5,-1951), (5,6,9808), (5,7,-5556),
-          |  (6,0,3827), (6,1,-9239), (6,2,9239), (6,3,-3827), (6,4,-3827), (6,5,9239), (6,6,-9239), (6,7,3827),
-          |  (7,0,1951), (7,1,-5556), (7,2,8315), (7,3,-9808), (7,4,9808), (7,5,-8315), (7,6,5556), (7,7,-1951)
-          |) AS t(u, x, k)),
+        s""",${OracleSql.dctBasis},
           |dct AS (SELECT b.doc_id, ku.u AS u, kv.u AS v,
           |          CAST(sum(b.bs * ku.k * kv.k) AS BIGINT) AS dcoef
           |        FROM blk b
@@ -3939,20 +3584,7 @@ object LlmQueries {
           Dedup.winnowingFingerprints(incoming), dropPm = 600)
         incoming.select(col("doc_id")).join(matched, Seq("doc_id"), "left_anti")
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tk AS (SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS pos
-        |  FROM toks WHERE len(t) >= 7),
-        |kh AS (SELECT doc_id, pos, CAST(list_sum(list_transform(range(1, 13),
-        |    i -> (strpos('0123456789abcdef',
-        |           substr(md5(array_to_string(t[pos:pos+3], ' ')), CAST(i AS INT), 1)) - 1)
-        |         * 16.0 ** (12 - i))) AS BIGINT) AS h
-        |  FROM tk),
-        |wmin AS (SELECT doc_id, pos,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    count(*) OVER (PARTITION BY doc_id) AS nk
-        |  FROM kh),
-        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin WHERE pos <= nk - 3),
+      Some(s"""WITH ${OracleSql.winnowingFingerprints},
         |corp AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 10 = 0),
         |inc AS (SELECT doc_id, fp FROM fps WHERE doc_id % 10 != 0),
         |per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS total,
@@ -4013,30 +3645,9 @@ object LlmQueries {
           maxHamming = 8, hashCol = "afp")
         incoming.join(matched, Seq("doc_id"), "left_anti")
       },
-      Some("""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s FROM documents),
+      Some(s"""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s FROM documents),
         |u AS (SELECT doc_id, s, unnest(range(0, 256)) AS i FROM d),
-        |w AS (SELECT doc_id, i // 32 AS t, (i % 32) // 4 AS x,
-        |        ((s + 1) * ((i*i) % 97) + 13*i) % 4001 - 2000
-        |        + CASE WHEN doc_id % 5 = 0 AND i < 24 THEN 1500 ELSE 0 END AS amp
-        |      FROM u),
-        |bsum AS (SELECT doc_id, t, x, CAST(sum(amp) AS BIGINT) AS bs FROM w GROUP BY 1, 2, 3),
-        |kt AS (SELECT * FROM (VALUES
-        |  (0,0,10000), (0,1,10000), (0,2,10000), (0,3,10000), (0,4,10000), (0,5,10000), (0,6,10000), (0,7,10000),
-        |  (1,0,9808), (1,1,8315), (1,2,5556), (1,3,1951), (1,4,-1951), (1,5,-5556), (1,6,-8315), (1,7,-9808),
-        |  (2,0,9239), (2,1,3827), (2,2,-3827), (2,3,-9239), (2,4,-9239), (2,5,-3827), (2,6,3827), (2,7,9239),
-        |  (3,0,8315), (3,1,-1951), (3,2,-9808), (3,3,-5556), (3,4,5556), (3,5,9808), (3,6,1951), (3,7,-8315),
-        |  (4,0,7071), (4,1,-7071), (4,2,-7071), (4,3,7071), (4,4,7071), (4,5,-7071), (4,6,-7071), (4,7,7071),
-        |  (5,0,5556), (5,1,-9808), (5,2,1951), (5,3,8315), (5,4,-8315), (5,5,-1951), (5,6,9808), (5,7,-5556),
-        |  (6,0,3827), (6,1,-9239), (6,2,9239), (6,3,-3827), (6,4,-3827), (6,5,9239), (6,6,-9239), (6,7,3827),
-        |  (7,0,1951), (7,1,-5556), (7,2,8315), (7,3,-9808), (7,4,9808), (7,5,-8315), (7,6,5556), (7,7,-1951)
-        |) AS t(u, x, k)),
-        |c AS (SELECT b.doc_id, b.t, kt.u, CAST(sum(b.bs * kt.k) AS BIGINT) AS coef
-        |      FROM bsum b JOIN kt ON kt.x = b.x GROUP BY 1, 2, 3),
-        |fp AS (SELECT doc_id,
-        |         bit_or(CASE WHEN coef > 0 AND t*8 + u = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-        |                     WHEN coef > 0 THEN CAST(1 AS BIGINT) << CAST(t*8 + u AS INT)
-        |                     ELSE CAST(0 AS BIGINT) END) AS afp
-        |       FROM c GROUP BY doc_id),
+        |${OracleSql.audioFingerprints},
         |corp AS (SELECT doc_id, afp FROM fp WHERE doc_id % 10 = 0),
         |inc AS (SELECT doc_id, afp FROM fp WHERE doc_id % 10 != 0),
         |cb0 AS (SELECT doc_id, afp, (afp >> CAST(16*band AS INT)) & 65535 AS bv, band
@@ -4286,30 +3897,9 @@ object LlmQueries {
           Audio.spectralFingerprints(docs(s, dir).select(col("doc_id")).as[Long]).toDF(),
           hashCol = "afp")
       },
-      Some("""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s FROM documents),
+      Some(s"""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s FROM documents),
         |u AS (SELECT doc_id, s, unnest(range(0, 256)) AS i FROM d),
-        |w AS (SELECT doc_id, i // 32 AS t, (i % 32) // 4 AS x,
-        |        ((s + 1) * ((i*i) % 97) + 13*i) % 4001 - 2000
-        |        + CASE WHEN doc_id % 5 = 0 AND i < 24 THEN 1500 ELSE 0 END AS amp
-        |      FROM u),
-        |bsum AS (SELECT doc_id, t, x, CAST(sum(amp) AS BIGINT) AS bs FROM w GROUP BY 1, 2, 3),
-        |kt AS (SELECT * FROM (VALUES
-        |  (0,0,10000), (0,1,10000), (0,2,10000), (0,3,10000), (0,4,10000), (0,5,10000), (0,6,10000), (0,7,10000),
-        |  (1,0,9808), (1,1,8315), (1,2,5556), (1,3,1951), (1,4,-1951), (1,5,-5556), (1,6,-8315), (1,7,-9808),
-        |  (2,0,9239), (2,1,3827), (2,2,-3827), (2,3,-9239), (2,4,-9239), (2,5,-3827), (2,6,3827), (2,7,9239),
-        |  (3,0,8315), (3,1,-1951), (3,2,-9808), (3,3,-5556), (3,4,5556), (3,5,9808), (3,6,1951), (3,7,-8315),
-        |  (4,0,7071), (4,1,-7071), (4,2,-7071), (4,3,7071), (4,4,7071), (4,5,-7071), (4,6,-7071), (4,7,7071),
-        |  (5,0,5556), (5,1,-9808), (5,2,1951), (5,3,8315), (5,4,-8315), (5,5,-1951), (5,6,9808), (5,7,-5556),
-        |  (6,0,3827), (6,1,-9239), (6,2,9239), (6,3,-3827), (6,4,-3827), (6,5,9239), (6,6,-9239), (6,7,3827),
-        |  (7,0,1951), (7,1,-5556), (7,2,8315), (7,3,-9808), (7,4,9808), (7,5,-8315), (7,6,5556), (7,7,-1951)
-        |) AS t(u, x, k)),
-        |c AS (SELECT b.doc_id, b.t, kt.u, CAST(sum(b.bs * kt.k) AS BIGINT) AS coef
-        |      FROM bsum b JOIN kt ON kt.x = b.x GROUP BY 1, 2, 3),
-        |fp AS (SELECT doc_id,
-        |         bit_or(CASE WHEN coef > 0 AND t*8 + u = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-        |                     WHEN coef > 0 THEN CAST(1 AS BIGINT) << CAST(t*8 + u AS INT)
-        |                     ELSE CAST(0 AS BIGINT) END) AS afp
-        |       FROM c GROUP BY doc_id),
+        |${OracleSql.audioFingerprints},
         |bands AS (SELECT doc_id, afp, unnest(range(0, 4)) AS band FROM fp),
         |bk0 AS (SELECT doc_id, afp, (afp >> CAST(16*band AS INT)) & 65535 AS bv, band FROM bands),
         |hotb AS (SELECT band, bv FROM bk0 GROUP BY band, bv HAVING count(*) > 1000),
@@ -4533,26 +4123,10 @@ object LlmQueries {
         import s.implicits._
         Audio.audioAlignments(docs(s, dir).select(col("doc_id")).as[Long])
       },
-      Some("""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s,
+      Some(s"""WITH d AS (SELECT doc_id, CAST(doc_id % 256 AS BIGINT) AS s,
         |  400 + (doc_id % 100) * 8 AS n FROM documents),
         |u AS (SELECT doc_id, s, unnest(range(0, (n // 32) * 32)) AS i FROM d),
-        |w AS (SELECT doc_id, i // 32 AS t, (i % 32) // 4 AS x,
-        |        ((s + 1) * ((i*i) % 97) + 13*i) % 4001 - 2000
-        |        + CASE WHEN doc_id % 5 = 0 AND i < 24 THEN 1500 ELSE 0 END AS amp
-        |      FROM u),
-        |bsum AS (SELECT doc_id, t, x, CAST(sum(amp) AS BIGINT) AS bs FROM w GROUP BY 1, 2, 3),
-        |kt AS (SELECT * FROM (VALUES
-        |  (0,0,10000), (0,1,10000), (0,2,10000), (0,3,10000), (0,4,10000), (0,5,10000), (0,6,10000), (0,7,10000),
-        |  (1,0,9808), (1,1,8315), (1,2,5556), (1,3,1951), (1,4,-1951), (1,5,-5556), (1,6,-8315), (1,7,-9808),
-        |  (2,0,9239), (2,1,3827), (2,2,-3827), (2,3,-9239), (2,4,-9239), (2,5,-3827), (2,6,3827), (2,7,9239),
-        |  (3,0,8315), (3,1,-1951), (3,2,-9808), (3,3,-5556), (3,4,5556), (3,5,9808), (3,6,1951), (3,7,-8315),
-        |  (4,0,7071), (4,1,-7071), (4,2,-7071), (4,3,7071), (4,4,7071), (4,5,-7071), (4,6,-7071), (4,7,7071),
-        |  (5,0,5556), (5,1,-9808), (5,2,1951), (5,3,8315), (5,4,-8315), (5,5,-1951), (5,6,9808), (5,7,-5556),
-        |  (6,0,3827), (6,1,-9239), (6,2,9239), (6,3,-3827), (6,4,-3827), (6,5,9239), (6,6,-9239), (6,7,3827),
-        |  (7,0,1951), (7,1,-5556), (7,2,8315), (7,3,-9808), (7,4,9808), (7,5,-8315), (7,6,5556), (7,7,-1951)
-        |) AS t(u, x, k)),
-        |c AS (SELECT b.doc_id, b.t, kt.u, CAST(sum(b.bs * kt.k) AS BIGINT) AS coef
-        |      FROM bsum b JOIN kt ON kt.x = b.x GROUP BY 1, 2, 3),
+        |${OracleSql.audioDct},
         |sig AS (SELECT doc_id, t, list(coef ORDER BY u) AS sg FROM c GROUP BY 1, 2),
         |m AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |        a.t AS ai, a.t - b.t AS diag
@@ -4592,9 +4166,7 @@ object LlmQueries {
           .select(col("doc_id"), col("n_sh").cast("long").as("n_sh"),
             expr("CAST(shared * 1000 AS BIGINT) div n_sh").as("shared_per_mille"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
+      Some(s"""WITH ${OracleSql.shingles3},
         |df AS (SELECT s, count(DISTINCT doc_id) AS df FROM sh GROUP BY s),
         |per AS (SELECT sh.doc_id, count(*) AS n_sh,
         |          sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS shared
@@ -4748,21 +4320,8 @@ object LlmQueries {
     // three join+aggregate rounds as SQL CTEs.
     "graph_pagerank" -> ((
       (s: SparkSession, dir: String) =>
-        Graph.pageRank(Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b")), iters = 3, damping = 0.85),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+        Graph.pageRank(QueryUtil.nearDupEdges(docs(s, dir)), iters = 3, damping = 0.85),
+      Some(s"""WITH ${OracleSql.jaccardGraph("e")},
         |nodes AS (SELECT DISTINCT src AS v FROM e),
         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
         |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS dg FROM e GROUP BY 1),
@@ -4791,8 +4350,7 @@ object LlmQueries {
     // both unrolled rounds replay bit-for-bit (no sign split needed).
     "graph_hits" -> ((
       (s: SparkSession, dir: String) =>
-        Graph.hits(Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b")), iters = 2),
+        Graph.hits(QueryUtil.nearDupEdges(docs(s, dir)), iters = 2),
       Some {
         val rounds = (1 to 2).map { t =>
           s"""a${t}r AS (SELECT doc_b AS v, CAST(sum(h) AS BIGINT) AS r
@@ -4808,14 +4366,7 @@ object LlmQueries {
              |    CAST(coalesce(h${t}r.r, 0) // h${t}m.m AS BIGINT) AS h
              |  FROM nodes CROSS JOIN h${t}m LEFT JOIN h${t}r ON h${t}r.v = nodes.v)""".stripMargin
         }.mkString(",\n")
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-           |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-           |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-           |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-           |prs AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-           |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+        s"""WITH ${OracleSql.shinglePairs("prs")},
            |jp AS MATERIALIZED (SELECT doc_a, doc_b FROM prs p
            |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
            |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
@@ -4840,8 +4391,7 @@ object LlmQueries {
     // high-cardinality node id; m is a bounded scalar broadcast.
     "graph_louvain_stage" -> ((
       (s: SparkSession, dir: String) => {
-        val e = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b"))
+        val e = QueryUtil.nearDupEdges(docs(s, dir))
           .eagerPersisted
         val und = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .unionAll(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -4858,19 +4408,7 @@ object LlmQueries {
               .otherwise(col("src")).as("community"),
             greatest(lit(2L) * col("m") - col("ki") * col("kj"), lit(0L)).as("gain_num"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |und AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+      Some(s"""WITH ${OracleSql.jaccardGraph("und")},
         |deg AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS k FROM und GROUP BY 1),
         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM jp),
         |cand AS (SELECT u.src, u.dst, ki.k AS ki, kj.k AS kj,
@@ -4891,22 +4429,9 @@ object LlmQueries {
     "graph_ppr" -> ((
       (s: SparkSession, dir: String) =>
         Graph.personalizedPageRank(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b")),
+          QueryUtil.nearDupEdges(docs(s, dir)),
           seedPred = pmod(col("doc_id"), lit(50)) === 0, iters = 3),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+      Some(s"""WITH ${OracleSql.jaccardGraph("e")},
         |nodes AS (SELECT DISTINCT src AS v, src % 50 = 0 AS is_seed FROM e),
         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS ns FROM nodes WHERE is_seed),
         |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS dg FROM e GROUP BY 1),
@@ -4936,22 +4461,9 @@ object LlmQueries {
     "graph_hops" -> ((
       (s: SparkSession, dir: String) =>
         Graph.hopDistances(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b")),
+          QueryUtil.nearDupEdges(docs(s, dir)),
           seedPred = pmod(col("doc_id"), lit(50)) === 0, maxHops = 3),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+      Some(s"""WITH ${OracleSql.jaccardGraph("e")},
         |l0 AS (SELECT DISTINCT src AS doc_id FROM e WHERE src % 50 = 0),
         |l1 AS (SELECT DISTINCT e.dst AS doc_id FROM e JOIN l0 ON l0.doc_id = e.src
         |       WHERE e.dst NOT IN (SELECT doc_id FROM l0)),
@@ -4978,20 +4490,9 @@ object LlmQueries {
     "graph_harmonic_landmarks" -> ((
       (s: SparkSession, dir: String) =>
         Graph.landmarkHarmonic(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b")),
+          QueryUtil.nearDupEdges(docs(s, dir)),
           seedPred = pmod(col("doc_id"), lit(7)) === 0, maxHops = 3),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
+      Some(s"""WITH ${OracleSql.jaccardPairs},
         |e AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM jp
         |  UNION ALL SELECT doc_b, doc_a FROM jp),
         |l0 AS MATERIALIZED (SELECT DISTINCT src AS lm, src AS doc_id FROM e WHERE src % 7 = 0),
@@ -5542,21 +5043,8 @@ object LlmQueries {
     "graph_assortativity" -> ((
       (s: SparkSession, dir: String) =>
         Graph.assortativity(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b"))),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+          QueryUtil.nearDupEdges(docs(s, dir))),
+      Some(s"""WITH ${OracleSql.jaccardGraph("e")},
         |deg AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1),
         |x AS (SELECT da.d AS dx, db.d AS dy
         |  FROM e JOIN deg da ON da.v = e.src JOIN deg db ON db.v = e.dst),
@@ -5584,30 +5072,8 @@ object LlmQueries {
     "graph_triangles" -> ((
       (s: SparkSession, dir: String) =>
         Graph.triangleCounts(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b"))),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a AS a, doc_b AS b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |deg AS (SELECT v, count(*) AS dg FROM
-        |  (SELECT a AS v FROM jp UNION ALL SELECT b FROM jp) GROUP BY 1),
-        |o AS (SELECT
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN jp.a ELSE jp.b END AS src,
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN jp.b ELSE jp.a END AS dst,
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN db.dg ELSE da.dg END AS dst_dg
-        |  FROM jp JOIN deg da ON da.v = jp.a JOIN deg db ON db.v = jp.b),
-        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS x
-        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |  AND (e1.dst_dg, e1.dst) < (e2.dst_dg, e2.dst)),
-        |tri AS (SELECT u, v, x FROM wg JOIN o e3 ON e3.src = wg.v AND e3.dst = wg.x)
+          QueryUtil.nearDupEdges(docs(s, dir))),
+      Some(s"""WITH ${OracleSql.orientedTriangles}
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS triangles FROM
         |  (SELECT u AS doc_id FROM tri UNION ALL SELECT v FROM tri
         |   UNION ALL SELECT x FROM tri)
@@ -5624,30 +5090,8 @@ object LlmQueries {
     "graph_clustering_coeff" -> ((
       (s: SparkSession, dir: String) =>
         Graph.clusteringCoefficients(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b"))),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a AS a, doc_b AS b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |deg AS (SELECT v, count(*) AS dg FROM
-        |  (SELECT a AS v FROM jp UNION ALL SELECT b FROM jp) GROUP BY 1),
-        |o AS (SELECT
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN jp.a ELSE jp.b END AS src,
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN jp.b ELSE jp.a END AS dst,
-        |  CASE WHEN (da.dg, jp.a) < (db.dg, jp.b) THEN db.dg ELSE da.dg END AS dst_dg
-        |  FROM jp JOIN deg da ON da.v = jp.a JOIN deg db ON db.v = jp.b),
-        |wg AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS x
-        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |  AND (e1.dst_dg, e1.dst) < (e2.dst_dg, e2.dst)),
-        |tri AS (SELECT u, v, x FROM wg JOIN o e3 ON e3.src = wg.v AND e3.dst = wg.x),
+          QueryUtil.nearDupEdges(docs(s, dir))),
+      Some(s"""WITH ${OracleSql.orientedTriangles},
         |tc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS triangles FROM
         |  (SELECT u AS doc_id FROM tri UNION ALL SELECT v FROM tri
         |   UNION ALL SELECT x FROM tri)
@@ -5673,21 +5117,8 @@ object LlmQueries {
     "graph_communities_lp" -> ((
       (s: SparkSession, dir: String) =>
         Graph.labelPropagation(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b")), iters = 3),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-        |  UNION ALL SELECT doc_b, doc_a FROM jp),
+          QueryUtil.nearDupEdges(docs(s, dir)), iters = 3),
+      Some(s"""WITH ${OracleSql.jaccardGraph("e")},
         |l0 AS (SELECT DISTINCT src AS v, src AS c FROM e),
         |k1 AS (SELECT e.dst AS v, l.c, count(*) AS cnt FROM e JOIN l0 l ON l.v = e.src GROUP BY 1, 2),
         |l1 AS (SELECT v, c FROM (SELECT v, c,
@@ -5718,8 +5149,7 @@ object LlmQueries {
         // round plus m/deg/lIn, and the community map by three joins —
         // the composed plan string passed the 262 KB print ceiling.
         // Cost matches the persists this replaces.
-        val pairs = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = QueryUtil.nearDupEdges(docs(s, dir))
           .localCheckpoint(true)
         val comm = Graph.labelPropagation(pairs, iters = 3)
           .localCheckpoint(true)
@@ -5741,14 +5171,7 @@ object LlmQueries {
           .agg(max("m").as("m"), count(lit(1)).as("n_communities"),
             sum("term").as("q_x4m2"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.shinglePairs("prs")},
         |jp AS MATERIALIZED (SELECT doc_a, doc_b FROM prs p
         |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
         |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
@@ -5779,19 +5202,8 @@ object LlmQueries {
     "graph_degrees" -> ((
       (s: SparkSession, dir: String) =>
         Graph.degreeHistogram(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b"))),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a AS a, doc_b AS b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
+          QueryUtil.nearDupEdges(docs(s, dir))),
+      Some(s"""WITH ${OracleSql.jaccardEdges},
         |deg AS (SELECT v, CAST(count(*) AS BIGINT) AS degree FROM
         |  (SELECT a AS v FROM jp UNION ALL SELECT b FROM jp) GROUP BY 1)
         |SELECT degree, CAST(count(*) AS BIGINT) AS node_cnt FROM deg GROUP BY 1""".stripMargin)
@@ -5808,8 +5220,7 @@ object LlmQueries {
     "graph_kcore" -> ((
       (s: SparkSession, dir: String) =>
         Graph.kCore(
-          Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-            .select(col("doc_a"), col("doc_b")), k = 2, maxRounds = 7),
+          QueryUtil.nearDupEdges(docs(s, dir)), k = 2, maxRounds = 7),
       Some {
         // every s_r is referenced three times by round r+1 (degree count +
         // both endpoint filters) — MATERIALIZED, or DuckDB's CTE inlining
@@ -5821,14 +5232,7 @@ object LlmQueries {
              |s$r AS MATERIALIZED (SELECT a, b FROM s${r - 1}
              |  WHERE a IN (SELECT v FROM k$r) AND b IN (SELECT v FROM k$r))""".stripMargin
         }.mkString(",\n")
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-           |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-           |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-           |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-           |prs AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-           |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+        s"""WITH ${OracleSql.shinglePairs("prs")},
            |s0 AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM prs p
            |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
            |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
@@ -5847,22 +5251,9 @@ object LlmQueries {
     // threshold clusters are fully transitive cliques with zero open
     // wedges). Floored-micro integer sums, exact SQL replay.
     "graph_adamic_adar" -> ((
-      (s: SparkSession, dir: String) => {
-        val sub = emb(s, dir).filter(pmod(col("vec_id"), lit(10)) === 0)
-        Graph.adamicAdar(
-          Similarity.bruteForceTopK(sub, sub, k = 3)
-            .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b")),
-          topN = 20)
-      },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id % 10 = 0),
-        |knn AS (SELECT q.vec_id AS qa, n.vec_id AS qb,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.v, n.v) DESC, n.vec_id) AS rnk
-        |  FROM e q JOIN e n ON n.vec_id <> q.vec_id QUALIFY rnk <= 3),
-        |und AS MATERIALIZED (SELECT DISTINCT least(qa, qb) AS a, greatest(qa, qb) AS b
-        |  FROM knn),
-        |adj AS (SELECT a AS z, b AS n FROM und UNION ALL SELECT b, a FROM und),
+      (s: SparkSession, dir: String) =>
+        Graph.adamicAdar(QueryUtil.sampleKnnEdges(emb(s, dir)), topN = 20),
+      Some(s"""WITH ${OracleSql.sampleKnnGraph},
         |deg AS (SELECT z, count(*) AS deg FROM adj GROUP BY 1),
         |contrib AS (SELECT z, CAST(floor(1e6 / ln(CAST(deg AS DOUBLE))) AS BIGINT) AS c
         |  FROM deg),
@@ -5883,22 +5274,9 @@ object LlmQueries {
     // neighborhoods outranks one merely touching a popular vertex. Same
     // hub-capped wedge machinery; integer ratio, exact SQL replay.
     "graph_jaccard_linkpred" -> ((
-      (s: SparkSession, dir: String) => {
-        val sub = emb(s, dir).filter(pmod(col("vec_id"), lit(10)) === 0)
-        Graph.jaccardLinkPred(
-          Similarity.bruteForceTopK(sub, sub, k = 3)
-            .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b")),
-          topN = 20)
-      },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id % 10 = 0),
-        |knn AS (SELECT q.vec_id AS qa, n.vec_id AS qb,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.v, n.v) DESC, n.vec_id) AS rnk
-        |  FROM e q JOIN e n ON n.vec_id <> q.vec_id QUALIFY rnk <= 3),
-        |und AS MATERIALIZED (SELECT DISTINCT least(qa, qb) AS a, greatest(qa, qb) AS b
-        |  FROM knn),
-        |adj AS (SELECT a AS z, b AS n FROM und UNION ALL SELECT b, a FROM und),
+      (s: SparkSession, dir: String) =>
+        Graph.jaccardLinkPred(QueryUtil.sampleKnnEdges(emb(s, dir)), topN = 20),
+      Some(s"""WITH ${OracleSql.sampleKnnGraph},
         |deg AS MATERIALIZED (SELECT z, CAST(count(*) AS BIGINT) AS deg
         |  FROM adj GROUP BY 1),
         |wedges AS (SELECT l.z, l.n AS a, r.n AS b FROM adj l JOIN adj r
@@ -5924,20 +5302,7 @@ object LlmQueries {
     "text_winnowing" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.winnowingPairs(docs(s, dir), k = 4, w = 4, maxDf = 5),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |tk AS (SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS pos
-        |  FROM toks WHERE len(t) >= 7),
-        |kh AS (SELECT doc_id, pos, CAST(list_sum(list_transform(range(1, 13),
-        |    i -> (strpos('0123456789abcdef',
-        |           substr(md5(array_to_string(t[pos:pos+3], ' ')), CAST(i AS INT), 1)) - 1)
-        |         * 16.0 ** (12 - i))) AS BIGINT) AS h
-        |  FROM tk),
-        |wmin AS (SELECT doc_id, pos,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    count(*) OVER (PARTITION BY doc_id) AS nk
-        |  FROM kh),
-        |fps AS (SELECT DISTINCT doc_id, fp FROM wmin WHERE pos <= nk - 3),
+      Some(s"""WITH ${OracleSql.winnowingFingerprints},
         |dfr AS (SELECT fp, count(*) AS df FROM fps GROUP BY 1),
         |pr AS (SELECT doc_id, fp FROM fps JOIN dfr USING (fp) WHERE df <= 5)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -5955,17 +5320,7 @@ object LlmQueries {
     "text_containment_prefix" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.containmentPairsPrefix(docs(s, dir), n = 3, pct = 90, maxDf = 0),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_in, b.doc_id AS doc_of, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_in, doc_of, common, ca.n_sh AS n_sh_in
-        |FROM prs p JOIN cnt ca ON ca.doc_id = p.doc_in
-        |WHERE common * 100 >= 90 * ca.n_sh""".stripMargin)
+      Some(OracleSql.containment90)
     )),
 
     // The PRODUCTION containment path: prefix filtering AND the `maxDf`
@@ -5981,10 +5336,7 @@ object LlmQueries {
     "text_containment_maxdf" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.containmentPairsPrefix(docs(s, dir), n = 3, pct = 90, maxDf = 5),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
+      Some(s"""WITH ${OracleSql.shingleCounts},
         |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
         |pr AS (SELECT doc_id, s FROM sh JOIN df USING (s) WHERE df <= 5),
         |prs AS (
@@ -6005,17 +5357,7 @@ object LlmQueries {
     "text_containment" -> ((
       (s: SparkSession, dir: String) =>
         Dedup.containmentPairs(docs(s, dir), n = 3, pct = 90, maxDf = 0),
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_in, b.doc_id AS doc_of, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_in, doc_of, common, ca.n_sh AS n_sh_in
-        |FROM prs p JOIN cnt ca ON ca.doc_id = p.doc_in
-        |WHERE common * 100 >= 90 * ca.n_sh""".stripMargin)
+      Some(OracleSql.containment90)
     )),
 
     // The containment FILTER — the curation action on the containment
@@ -6033,10 +5375,7 @@ object LlmQueries {
           .select(col("doc_in").as("doc_id")).distinct()
         d.join(contained, Seq("doc_id"), "left_anti").select(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
+      Some(s"""WITH ${OracleSql.shingleCounts},
         |prs AS (
         |  SELECT a.doc_id AS doc_in, b.doc_id AS doc_of, CAST(count(*) AS BIGINT) AS common
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
@@ -6442,8 +5781,7 @@ object LlmQueries {
     // doc with its train-side witness count.
     "q_split_leakage" -> ((
       (s: SparkSession, dir: String) => {
-        val pairs = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = QueryUtil.nearDupEdges(docs(s, dir))
         val sym = pairs.unionAll(
           pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
         // doc_a = candidate test doc, doc_b = potential train witness
@@ -6452,17 +5790,7 @@ object LlmQueries {
           .groupBy(col("doc_a").as("doc_id"))
           .agg(count(lit(1)).as("train_witnesses"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jp AS (SELECT doc_a, doc_b FROM prs p
-        |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
-        |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
+      Some(s"""WITH ${OracleSql.jaccardPairs},
         |sym AS (SELECT doc_a, doc_b FROM jp UNION ALL SELECT doc_b, doc_a FROM jp)
         |SELECT doc_a AS doc_id, CAST(count(*) AS BIGINT) AS train_witnesses
         |FROM sym WHERE doc_a % 10 >= 8 AND doc_b % 10 < 8
@@ -6487,9 +5815,7 @@ object LlmQueries {
           .select(col("doc_id"), col("n_sh"),
             expr("novel * 1000 div n_sh").as("novel_per_mille"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
+      Some(s"""WITH ${OracleSql.shingles3},
         |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh,
         |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) * 1000 // count(*) AS novel_per_mille
@@ -6530,22 +5856,7 @@ object LlmQueries {
         Similarity.knnGraphPivoted(emb(s, dir), k = 5, nPivots = 32, nProbe = 4)
           .select(col("query_id"), col("neighbor_id"),
             col("rank").cast("long").as("rnk")),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id)
+      Some(s"""WITH ${OracleSql.pivotScored("scored")}
         |SELECT query_id, neighbor_id,
         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS BIGINT) AS rnk
         |FROM scored QUALIFY rnk <= 5""".stripMargin)
@@ -6565,36 +5876,7 @@ object LlmQueries {
           .select(col("query_id"), col("neighbor_id"),
             col("rank").cast("long").as("rnk"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scored QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
-        |hop AS (SELECT s.query_id, g2.dst AS cand FROM seeds s JOIN g g2 ON g2.src = s.cand),
-        |beam AS (
-        |  SELECT DISTINCT query_id, cand
-        |  FROM (SELECT * FROM seeds UNION ALL SELECT * FROM hop)
-        |  WHERE cand <> query_id),
-        |rescored AS (
-        |  SELECT b.query_id, b.cand AS neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM beam b JOIN e q ON q.vec_id = b.query_id
-        |  JOIN e n ON n.vec_id = b.cand)
+      Some(s"""WITH ${OracleSql.graphBeam("scored")}
         |SELECT query_id, neighbor_id,
         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS BIGINT) AS rnk
         |FROM rescored QUALIFY rnk <= 5""".stripMargin)
@@ -6628,36 +5910,7 @@ object LlmQueries {
           .select(col("query_id"), col("k"), col("n_hit"),
             expr("n_hit * 100 div k").as("recall_pct"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scored QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
-        |hop AS (SELECT s.query_id, g2.dst AS cand FROM seeds s JOIN g g2 ON g2.src = s.cand),
-        |beam AS (
-        |  SELECT DISTINCT query_id, cand
-        |  FROM (SELECT * FROM seeds UNION ALL SELECT * FROM hop)
-        |  WHERE cand <> query_id),
-        |rescored AS (
-        |  SELECT b.query_id, b.cand AS neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM beam b JOIN e q ON q.vec_id = b.query_id
-        |  JOIN e n ON n.vec_id = b.cand),
+      Some(s"""WITH ${OracleSql.graphBeam("scored")},
         |approx AS (
         |  SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
@@ -6703,36 +5956,7 @@ object LlmQueries {
           .select(col("query_id"), col("dcg_micro"),
             expr(s"dcg_micro * 1000 div ${idcg}L").as("ndcg_pm"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scored QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
-        |hop AS (SELECT s.query_id, g2.dst AS cand FROM seeds s JOIN g g2 ON g2.src = s.cand),
-        |beam AS (
-        |  SELECT DISTINCT query_id, cand
-        |  FROM (SELECT * FROM seeds UNION ALL SELECT * FROM hop)
-        |  WHERE cand <> query_id),
-        |rescored AS (
-        |  SELECT b.query_id, b.cand AS neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM beam b JOIN e q ON q.vec_id = b.query_id
-        |  JOIN e n ON n.vec_id = b.cand),
+      Some(s"""WITH ${OracleSql.graphBeam("scored")},
         |approx AS (
         |  SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS pos
@@ -6784,36 +6008,7 @@ object LlmQueries {
           .select(col("query_id"), col("neighbor_id"),
             col("rnk").cast("long").as("rnk"), col("rrf"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scoredg AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scoredg QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
-        |hop AS (SELECT s.query_id, g2.dst AS cand FROM seeds s JOIN g g2 ON g2.src = s.cand),
-        |beam AS (
-        |  SELECT DISTINCT query_id, cand
-        |  FROM (SELECT * FROM seeds UNION ALL SELECT * FROM hop)
-        |  WHERE cand <> query_id),
-        |rescored AS (
-        |  SELECT b.query_id, b.cand AS neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM beam b JOIN e q ON q.vec_id = b.query_id
-        |  JOIN e n ON n.vec_id = b.cand),
+      Some(s"""WITH ${OracleSql.graphBeam("scoredg")},
         |approx AS (
         |  SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
@@ -6882,27 +6077,7 @@ object LlmQueries {
           .select(col("query_id"), col("neighbor_id"),
             col("rank").cast("long").as("rnk"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scored QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
+      Some(s"""WITH ${OracleSql.pivotGraph("scored")},
         |hop1 AS (SELECT DISTINCT s.query_id, g2.dst AS cand
         |         FROM seeds s JOIN g g2 ON g2.src = s.cand),
         |hop2 AS (SELECT DISTINCT h.query_id, g3.dst AS cand
@@ -6992,33 +6167,19 @@ object LlmQueries {
         val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("sdl"))
         val tf = toks.filter(col("tok").isin(terms: _*))
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-        val idf = df.crossJoin(broadcast(stats))
-          .select(col("tok"),
-            log((col("n").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-              .as("idf"),
-            (col("sdl").cast("double") / col("n")).as("avgdl"))
+        val idf = QueryUtil.bm25Idf(tf.groupBy("tok").agg(count(lit(1)).as("df")), stats)
         tf// no idf hint: idf is VOCABULARY-sized (grows with the corpus);
           // AQE broadcasts it while it fits, shuffles when it does not
           .join(idf, "tok").join(dl, "doc_id")
-          .select(col("doc_id"),
-            floor(lit(1e6) * col("idf") * (col("tf") * lit(2.2))
-              / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-              .cast("long").as("term_micro"))
+          .select(col("doc_id"), QueryUtil.bm25TermMicro.as("term_micro"))
           .groupBy("doc_id")
           .agg(count(lit(1)).cast("long").as("n_terms"),
             sum("term_micro").cast("long").as("bm25_micro"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |t AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-        |stats AS (SELECT count(*) AS n, sum(dl) AS sdl FROM dl),
+      Some(s"""WITH ${OracleSql.bm25Stats},
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t
         |       WHERE tok IN ('hash', 'join', 'scan') GROUP BY 1, 2),
-        |idf AS (SELECT tok,
-        |    ln((CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5)) AS idf,
-        |    CAST(sdl AS DOUBLE) / n AS avgdl
-        |  FROM (SELECT tok, count(*) AS df FROM tf GROUP BY 1), stats),
+        |${OracleSql.bm25Idf},
         |sc AS (SELECT tf.doc_id,
         |    CAST(floor(1e6 * idf * (tf * 2.2)
         |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))) AS BIGINT) AS term_micro
@@ -7188,22 +6349,7 @@ object LlmQueries {
           .select(col("query_id"), col("true_label"), col("pred_label"), col("votes"),
             (col("pred_label") === col("true_label")).as("correct"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
+      Some(s"""WITH ${OracleSql.pivotScored("scored")},
         |knn AS (SELECT query_id, neighbor_id FROM scored
         |  QUALIFY row_number() OVER (PARTITION BY query_id
         |    ORDER BY cs DESC, neighbor_id) <= 5),
@@ -7660,8 +6806,7 @@ object LlmQueries {
     // α < 1/λ_max convergence contract at production degrees.
     "graph_katz" -> ((
       (s: SparkSession, dir: String) =>
-        Graph.katz(Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b")), iters = 3),
+        Graph.katz(QueryUtil.nearDupEdges(docs(s, dir)), iters = 3),
       Some {
         val rounds = (1 to 3).map { t =>
           s"""c$t AS (SELECT dst AS v, CAST(sum(x) AS BIGINT) AS c
@@ -7670,14 +6815,7 @@ object LlmQueries {
              |    CAST(10000 + coalesce(c, 0) // 8 AS BIGINT) AS x
              |  FROM nodes LEFT JOIN c$t ON c$t.v = nodes.v)""".stripMargin
         }.mkString(",\n")
-        s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-           |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-           |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-           |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-           |prs AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-           |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2),
+        s"""WITH ${OracleSql.shinglePairs("prs")},
            |jp AS MATERIALIZED (SELECT doc_a, doc_b FROM prs p
            |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
            |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
@@ -7805,8 +6943,7 @@ object LlmQueries {
         // union, eRich once, deg re-joined twice) — the composed plan
         // string passed the 262 KB print ceiling. Cost matches the
         // persist it replaces.
-        val pairs = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, pct = 80, maxDf = 0)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = QueryUtil.nearDupEdges(docs(s, dir))
           .localCheckpoint(true)
         val deg = pairs.select(col("doc_a").as("v"))
           .unionAll(pairs.select(col("doc_b").as("v")))
@@ -7829,14 +6966,7 @@ object LlmQueries {
                 / (col("n_rich") * (col("n_rich") - 1))).cast("long"))
               .as("phi_ppm"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |u AS (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i FROM toks WHERE len(t) >= 3),
-        |sh AS (SELECT DISTINCT doc_id, CAST(len(t[i]) AS VARCHAR) || ':' || t[i] || CAST(len(t[i+1]) AS VARCHAR) || ':' || t[i+1] || CAST(len(t[i+2]) AS VARCHAR) || ':' || t[i+2] AS s FROM u),
-        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-        |prs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS common
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      Some(s"""WITH ${OracleSql.shinglePairs("prs")},
         |jp AS MATERIALIZED (SELECT doc_a, doc_b FROM prs p
         |  JOIN cnt ca ON ca.doc_id = p.doc_a JOIN cnt cb ON cb.doc_id = p.doc_b
         |  WHERE common * 100 >= 80 * (ca.n_sh + cb.n_sh - common)),
@@ -8094,36 +7224,7 @@ object LlmQueries {
           .select(col("query_id"),
             coalesce(expr("1000000L div pos"), lit(0L)).as("rr_micro"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (SELECT vec_id AS pid, v AS pv FROM e ORDER BY vec_id LIMIT 32),
-        |r AS (
-        |  SELECT e.vec_id, p.pid,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, p.pv) DESC, p.pid) AS pr
-        |  FROM e CROSS JOIN p),
-        |cell AS (SELECT vec_id AS neighbor_id, pid AS cluster FROM r WHERE pr = 1),
-        |probes AS (SELECT vec_id AS query_id, pid AS cluster FROM r WHERE pr <= 4),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN cell USING (cluster)
-        |  WHERE query_id <> neighbor_id),
-        |scored AS (
-        |  SELECT c.query_id, c.neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM cand c JOIN e q ON q.vec_id = c.query_id
-        |  JOIN e n ON n.vec_id = c.neighbor_id),
-        |g AS (
-        |  SELECT query_id AS src, neighbor_id AS dst,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
-        |  FROM scored QUALIFY rnk <= 5),
-        |seeds AS (SELECT src AS query_id, dst AS cand FROM g WHERE src < 8),
-        |hop AS (SELECT s.query_id, g2.dst AS cand FROM seeds s JOIN g g2 ON g2.src = s.cand),
-        |beam AS (
-        |  SELECT DISTINCT query_id, cand
-        |  FROM (SELECT * FROM seeds UNION ALL SELECT * FROM hop)
-        |  WHERE cand <> query_id),
-        |rescored AS (
-        |  SELECT b.query_id, b.cand AS neighbor_id, list_cosine_similarity(q.v, n.v) AS cs
-        |  FROM beam b JOIN e q ON q.vec_id = b.query_id
-        |  JOIN e n ON n.vec_id = b.cand),
+      Some(s"""WITH ${OracleSql.graphBeam("scored")},
         |approx AS (
         |  SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS pos
@@ -8432,36 +7533,7 @@ object LlmQueries {
     * Returns (query_id, doc_id, pos 1-6, team).
     */
   private def interleaveDraft(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
-    // tf is the only corpus-pass aggregate; dl (tokens per doc) = Σ tf
-    // per doc, so it folds from the CACHED tf instead of a second full
-    // pass over the exploded token relation (r16, guide §2.3: aggregate
-    // once, derive the rest) — which also makes toks single-reader, so
-    // its persist (and eager fill job) goes away entirely
-    val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .eagerPersisted
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("sdl"))
-    val idf = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select(col("tok"),
-        log((col("n").cast("double") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-          .as("idf"),
-        (col("sdl").cast("double") / col("n")).as("avgdl"))
-    val qterms = tf.filter(pmod(col("doc_id"), lit(100)) === 0)
-      .select(col("doc_id").as("query_id"), col("tok")).distinct()
-    val lex = qterms.join(tf, "tok")
-      .filter(col("doc_id") =!= col("query_id"))
-      // no idf hint: idf is VOCABULARY-sized (grows with the corpus);
-          // AQE broadcasts it while it fits, shuffles when it does not
-          .join(idf, "tok").join(dl, "doc_id")
-      .select(col("query_id"), col("doc_id"),
-        floor(lit(1e6) * col("idf") * (col("tf") * lit(2.2))
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .cast("long").as("tm"))
-      .groupBy("query_id", "doc_id").agg(sum("tm").as("lexs"))
+    val lex = QueryUtil.bm25QueryScores(docs(s, dir), "lexs")
     val wl = Window.partitionBy("query_id").orderBy(col("lexs").desc, col("doc_id"))
     val rA = lex.withColumn("ra", row_number().over(wl)).filter(col("ra") <= 5)
       .select(col("query_id"), col("doc_id"), col("ra"))
@@ -8510,23 +7582,7 @@ object LlmQueries {
          |    FROM $src $excl) WHERE rn = 1),
          |pk$k AS MATERIALIZED (${prev}SELECT query_id, doc_id, pos, team FROM s$k)""".stripMargin
     }.mkString(",\n")
-    val base = s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-       |t AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-       |stats AS (SELECT count(*) AS n, sum(dl) AS sdl FROM dl),
-       |tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY 1, 2),
-       |idf AS (SELECT tok,
-       |    ln((CAST(n AS DOUBLE) - df + 0.5) / (df + 0.5)) AS idf,
-       |    CAST(sdl AS DOUBLE) / n AS avgdl
-       |  FROM (SELECT tok, count(*) AS df FROM tf GROUP BY 1), stats),
-       |qt AS (SELECT DISTINCT doc_id AS query_id, tok FROM tf WHERE doc_id % 100 = 0),
-       |ls AS (SELECT qt.query_id, tf.doc_id,
-       |    CAST(floor(1e6 * idf * (tf * 2.2)
-       |      / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))) AS BIGINT) AS tm
-       |  FROM qt JOIN tf USING (tok) JOIN idf USING (tok)
-       |  JOIN dl ON dl.doc_id = tf.doc_id
-       |  WHERE tf.doc_id <> qt.query_id),
-       |lex AS (SELECT query_id, doc_id, CAST(sum(tm) AS BIGINT) AS lexs FROM ls GROUP BY 1, 2),
+    val base = s"""WITH ${OracleSql.bm25Lex("lexs")},
        |la AS MATERIALIZED (SELECT query_id, doc_id,
        |    row_number() OVER (PARTITION BY query_id ORDER BY lexs DESC, doc_id) AS ra
        |  FROM lex QUALIFY ra <= 5),
@@ -8568,14 +7624,7 @@ object LlmQueries {
          |${norm(s"y$r", s"ny$r")},
          |${deflate(s"ny$r", r)}""".stripMargin
     }.mkString(",\n")
-    val base = s"""WITH e AS (SELECT vec_id,
-       |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 10000) AS BIGINT)) AS q
-       |  FROM embeddings),
-       |u AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx, q[i] AS qv
-       |      FROM e, unnest(range(1, len(q) + 1)) AS t(i)),
-       |mu AS (SELECT idx, CAST(floor(CAST(sum(qv) AS DOUBLE) / count(*)) AS BIGINT) AS mu
-       |       FROM u GROUP BY 1),
-       |c AS (SELECT vec_id, idx, qv - mu AS cv FROM u JOIN mu USING (idx)),
+    val base = s"""WITH ${OracleSql.centeredDims},
        |cov AS MATERIALIZED (SELECT i, j, CAST(CASE WHEN s < 0 THEN -(abs(s) // nn)
        |          ELSE abs(s) // nn END AS BIGINT) AS cv
        |        FROM (SELECT a.idx AS i, b.idx AS j,

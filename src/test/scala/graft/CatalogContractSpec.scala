@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+
 /** Driver-contract meta-checks over the whole catalog: the gate compares
   * Spark results to DuckDB with columns sorted by NAME, so an alias that
   * drifts between the Spark plan and the oracle SQL hash-mismatches even
@@ -18,6 +20,17 @@ package graft
 class CatalogContractSpec extends SparkSpec {
 
   private lazy val entries = SparkEntry.queries.keys.toSeq.sorted
+
+  /** Every entry built once, its analyzed, optimized and executed plans
+    * forced once; each plan gate below reads these.
+    */
+  private lazy val plans: Map[String, QueryExecution] = entries.map { name =>
+    val qe = SparkEntry.queries(name)(spark, sf0001).queryExecution
+    qe.analyzed
+    qe.optimizedPlan
+    qe.executedPlan
+    name -> qe
+  }.toMap
 
   test("no duplicate entry keys across the query source files") {
     // A Map literal with a repeated key keeps the LAST binding silently —
@@ -42,7 +55,7 @@ class CatalogContractSpec extends SparkSpec {
 
   test("every catalog query analyzes and has distinct, lowercase column names") {
     val bad = entries.flatMap { name =>
-      val schema = SparkEntry.queries(name)(spark, sf0001).schema
+      val schema = plans(name).analyzed.schema
       val cols = schema.fieldNames.toSeq
       val dups = cols.groupBy(identity).collect { case (c, g) if g.size > 1 => c }
       val upper = cols.filter(c => c != c.toLowerCase)
@@ -58,7 +71,7 @@ class CatalogContractSpec extends SparkSpec {
     val bad = entries.flatMap { name =>
       SparkEntry.oracleSql.get(name).toSeq.flatMap { sql =>
         val sqlLower = sql.toLowerCase
-        val schema = SparkEntry.queries(name)(spark, sf0001).schema
+        val schema = plans(name).analyzed.schema
         schema.fieldNames.filterNot { c =>
           java.util.regex.Pattern.compile("\\b" + java.util.regex.Pattern.quote(c.toLowerCase) + "\\b")
             .matcher(sqlLower).find()
@@ -104,8 +117,7 @@ class CatalogContractSpec extends SparkSpec {
     // brute-force twin whose query set IS the corpus.
     val accepted = Set("vector_knn_graph")
     val offenders = entries.filterNot(accepted).filter { name =>
-      graft.tools.PlanAudit.hasUnboundedBroadcastHint(
-        SparkEntry.queries(name)(spark, sf0001).queryExecution.analyzed)
+      graft.tools.PlanAudit.hasUnboundedBroadcastHint(plans(name).analyzed)
     }
     assert(offenders.isEmpty,
       s"broadcast hints on unbounded subtrees: ${offenders.mkString(", ")}")
@@ -125,8 +137,7 @@ class CatalogContractSpec extends SparkSpec {
       "dedup_embedding_cosine", "vector_knn_graph", "stream_embedding_dedup_recall",
       "dedup_simhash_witness", "dedup_embedding_lsh_witness", "dedup_semantic_witness")
     val offenders = entries.filterNot(accepted).filter { name =>
-      graft.tools.PlanAudit.hasUnboundedCrossShape(
-        SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan)
+      graft.tools.PlanAudit.hasUnboundedCrossShape(plans(name).optimizedPlan)
     }
     assert(offenders.isEmpty,
       s"cross-shaped joins over unbounded inputs: ${offenders.mkString(", ")}")
@@ -145,8 +156,7 @@ class CatalogContractSpec extends SparkSpec {
     // entry here.
     val accepted = Set.empty[String]
     val offenders = entries.filterNot(accepted).filter { name =>
-      graft.tools.PlanAudit.hasSmallDomainKeyJoin(
-        SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan)
+      graft.tools.PlanAudit.hasSmallDomainKeyJoin(plans(name).optimizedPlan)
     }
     assert(offenders.isEmpty,
       s"small-domain-key joins without a cap: ${offenders.mkString(", ")}")
@@ -165,8 +175,7 @@ class CatalogContractSpec extends SparkSpec {
     // even the quadratic control never needs an exemption.
     val accepted = Set.empty[String]
     val offenders = entries.filterNot(accepted).filter { name =>
-      graft.tools.PlanAudit.hasModelKeyJoin(
-        SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan)
+      graft.tools.PlanAudit.hasModelKeyJoin(plans(name).optimizedPlan)
     }
     assert(offenders.isEmpty,
       s"model-output-key joins without a cell cap: ${offenders.mkString(", ")}")
@@ -214,7 +223,7 @@ class CatalogContractSpec extends SparkSpec {
       // old grid×grid crossJoin rank (r14 verdict item 3)
       "q_kruskal_wallis")
     val offenders = entries.filterNot(accepted).filter { name =>
-      SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan.collect {
+      plans(name).optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty &&
           w.child.collectFirst { case _: GlobalLimit | _: LocalLimit => () }.isEmpty => w
       }.nonEmpty
@@ -233,8 +242,7 @@ class CatalogContractSpec extends SparkSpec {
     // the fix for a new offender is a lineage cut, not a listing.
     val accepted = Set.empty[String]
     val offenders = entries.filterNot(accepted).flatMap { name =>
-      val len = SparkEntry.queries(name)(spark, sf0001)
-        .queryExecution.executedPlan.toString.length
+      val len = plans(name).executedPlan.toString.length
       if (len > 250000) Some(s"$name: $len chars") else None
     }
     assert(offenders.isEmpty, s"giant plans: ${offenders.mkString(", ")}")

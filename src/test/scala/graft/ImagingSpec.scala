@@ -22,6 +22,34 @@ class ImagingSpec extends SparkSpec {
     }
   }
 
+  test("codec calls bring their own memory streams, whatever ImageIO's cache setting") {
+    import javax.imageio.ImageIO
+    // touch Imaging first: no initializer may reset the setting below
+    val (w, h) = Imaging.dims(7L)
+    val gray = (x: Int, y: Int) => Imaging.pixel(7L, x, y)
+    val useCache = ImageIO.getUseCache
+    val cacheDir = ImageIO.getCacheDirectory
+    // a disk cache in a directory that is gone: a codec call that lets
+    // ImageIO pick its stream cannot create its temp file
+    val gone = java.nio.file.Files.createTempDirectory("graft-imageio-cache").toFile
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(gone)
+      assert(gone.delete())
+      val png = Imaging.decode(Imaging.encodePng(w, h, gray))
+      assert(png.getWidth == w && png.getHeight == h)
+      for (x <- 0 until w; y <- 0 until h)
+        assert((png.getRGB(x, y) & 0xFF) == gray(x, y), s"png pixel ($x,$y)")
+      val jpg = Imaging.decode(Imaging.encodeJpeg(w, h, gray))
+      assert(jpg.getWidth == w && jpg.getHeight == h)
+      val bmp = Imaging.decode(Imaging.encodeBmp(w, h, gray))
+      assert((bmp.getRGB(1, 1) & 0xFF) == gray(1, 1))
+    } finally {
+      ImageIO.setCacheDirectory(cacheDir)
+      ImageIO.setUseCache(useCache)
+    }
+  }
+
   test("BMP rows are bottom-up with 4-byte padding (odd widths decode right)") {
     // w=17 → rowBytes 51 → pad 1; a decoder ignoring padding would shear rows
     val img = Imaging.decode(Imaging.encodeBmp(17, 3, (x, y) => (x * 10 + y) % 256))
